@@ -1,5 +1,12 @@
 package graft.operators
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.ListenerFlush
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkFixture, SparkEntry}
@@ -17,6 +24,31 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution
       .explainString(org.apache.spark.sql.execution.FormattedMode)
+
+  /** Executed plans of the per-round lineage cuts a query runs while it
+    * is built. The iterative graph operators materialize each round
+    * with an eager `localCheckpoint`, so the returned frame's plan
+    * starts at a `Scan ExistingRDD` and never shows the round joins;
+    * the rounds run as their own actions, which a
+    * [[QueryExecutionListener]] observes. A round is a `localCheckpoint`
+    * whose plan holds a join — the 1-row seed/source cuts have none.
+    */
+  private def roundPlans(name: String): Seq[String] = {
+    val cuts = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") cuts.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // drain first: earlier tests' queued actions must not reach this listener
+    ListenerFlush.flush(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries(name)(spark, dir)
+      ListenerFlush.flush(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    cuts.asScala.toSeq.filter(_.contains("Join"))
+  }
 
   test("selective filters reach the parquet scan (PushedFilters)") {
     val p = planOf("filter_agg_revenue")
@@ -80,8 +112,12 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("graph similarity queries: equi-joins over the edge index, never a cartesian") {
-    for (name <- Seq("graph_jaccard", "graph_ppr", "graph_link_predict")) {
-      val p = planOf(name)
+    // ppr's rank joins run in its per-round cuts, not its final plan
+    val pprRounds = roundPlans("graph_ppr")
+    assert(pprRounds.size == Graph.PrIters, s"expected ${Graph.PrIters} ppr rounds, saw ${pprRounds.size}")
+    val plans = Seq("graph_jaccard", "graph_ppr", "graph_link_predict").map(n => n -> planOf(n)) ++
+      pprRounds.map("graph_ppr round" -> _)
+    for ((name, p) <- plans) {
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
         s"$name plan grew a product:\n${p.linesIterator.take(25).mkString("\n")}")
     }
@@ -328,7 +364,11 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
 
   test("label propagation: equi-joins only, top-20 as TakeOrdered") {
     val p = planOf("graph_communities")
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"))
+    // the label-vector joins run in the per-round cuts
+    val rounds = roundPlans("graph_communities")
+    assert(rounds.size == Graph.CommRounds, s"expected ${Graph.CommRounds} rounds, saw ${rounds.size}")
+    for (r <- p +: rounds)
+      assert(!r.contains("BroadcastNestedLoopJoin") && !r.contains("CartesianProduct"), r)
     assert(p.contains("TakeOrderedAndProject"), "top-20 should avoid a global sort")
   }
 
@@ -377,16 +417,29 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     // MB/query at sf0.1). The bucketed edge serving must keep every
     // round's edge side exchange-free — the only hash exchanges left
     // are the |V|-scale rank/label/message vectors (p/v), never u.
-    for (q <- Seq("graph_pagerank", "graph_ppr", "graph_bfs", "graph_communities")) {
-      val p = planOf(q)
-      val edgeExchanges = "Exchange hashpartitioning\\(u#".r.findAllIn(p).size
-      assert(edgeExchanges == 0,
-        s"$q re-exchanges the edge list $edgeExchanges time(s):\n$p")
+    // Each round is its own eager lineage cut, so the rounds are read
+    // from the executed per-round plans (the one-line-per-operator
+    // format this regex matches); the round count keeps a guard that
+    // sees no rounds from passing.
+    val iterative = Seq("graph_pagerank" -> Graph.PrIters, "graph_ppr" -> Graph.PrIters,
+      "graph_bfs" -> Graph.BfsHops, "graph_communities" -> Graph.CommRounds)
+    for ((q, expected) <- iterative) {
+      val rounds = roundPlans(q)
+      assert(rounds.size == expected, s"$q: expected $expected round plans, saw ${rounds.size}")
+      for (p <- rounds) {
+        val edgeExchanges = "Exchange hashpartitioning\\(u#".r.findAllIn(p).size
+        assert(edgeExchanges == 0,
+          s"$q re-exchanges the edge list $edgeExchanges time(s):\n$p")
+      }
     }
   }
 
   test("BFS hops probe the bucketed edge scan directly") {
-    val p = planOf("graph_bfs")
-    assert(p.contains("SelectedBucketsCount"), s"bfs must scan the bucketed edge table:\n$p")
+    // each hop is its own eager lineage cut: the returned frame's plan
+    // starts at the last cut, so every hop's executed plan is checked
+    val hops = roundPlans("graph_bfs")
+    assert(hops.size == Graph.BfsHops, s"expected ${Graph.BfsHops} hop plans, saw ${hops.size}")
+    for (p <- hops)
+      assert(p.contains("SelectedBucketsCount"), s"bfs must scan the bucketed edge table:\n$p")
   }
 }
