@@ -527,11 +527,16 @@ object Pipeline {
   private def mixKeptDocs(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("source"), size(split(col("text"), " ")).as("nt"))
-    val thresholds = docs
+    // the K per-source totals come to the driver, where their min is
+    // taken: a global window over them would run through a
+    // single-partition exchange
+    val totals = docs
       .groupBy(col("source"))
       .agg(sum(col("nt")).cast("long").as("total_tokens"))
-      .withColumn("target_tokens",
-        min(col("total_tokens")).over(Window.partitionBy()))
+    val totalRows = totals.collect()
+    val target = totalRows.filterNot(_.isNullAt(1)).map(_.getLong(1)).minOption
+    val thresholds = spark.createDataFrame(java.util.Arrays.asList(totalRows: _*), totals.schema)
+      .withColumn("target_tokens", target.map(lit).getOrElse(lit(null)).cast("long"))
       .select(col("source"),
         expr(s"target_tokens * $MixRes DIV total_tokens").as("keep_threshold"))
     val draw = pmod(phash(concat_ws(":", col("source"), col("doc_id").cast("string"))),

@@ -115,9 +115,12 @@ final class ChangeStreamSync(
 
     // control events are detected AFTER the resume-token filter so a
     // post-rebuild stream replaying the log does not re-trigger the
-    // rebuild on the already-handled control event
-    val ctrl = fresh.filter(col("op").isin(ControlOps.toSeq: _*))
-      .agg(min(col("seq"))).collect().head
+    // rebuild on the already-handled control event. The same aggregate
+    // counts the change events the batch consumes, before the per-key
+    // LWW fold below.
+    val ctrl = fresh.agg(
+      min(when(col("op").isin(ControlOps.toSeq: _*), col("seq"))),
+      count(when(col("op").isin(ChangeOps: _*), lit(1)))).collect().head
     if (!ctrl.isNullAt(0)) {
       val ctrlSeq = ctrl.getLong(0)
       // record the rebuild OBLIGATION atomically before surfacing it:
@@ -140,10 +143,11 @@ final class ChangeStreamSync(
     }
 
     // final event per key by change order (LWW within the batch)
+    val nEvents = ctrl.getLong(1)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("_id")).orderBy(desc("seq"))
     val finals = fresh
-      .filter(col("op").isin("insert", "update", "replace", "delete"))
+      .filter(col("op").isin(ChangeOps: _*))
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_rn")
@@ -247,7 +251,7 @@ final class ChangeStreamSync(
             }
           } finally buckets.unpersist()
         }
-        metrics.recordChangeEvents(syncId, nFinal)
+        metrics.recordChangeEvents(syncId, nEvents)
       } finally parsed.unpersist()
 
       checkpoints.write(CheckpointRecord(
@@ -271,34 +275,32 @@ final class ChangeStreamSync(
     } finally finals.unpersist()
   }
 
-  /** Auto-mode schema evolution: infer the union schema of this batch's
-    * post-images (bounded sample) and add any new columns (explicit mode
+  /** Auto-mode schema evolution: infer the new columns from a bounded
+    * sample of this batch's post-images and add them (explicit mode
     * skips with the reference's log-and-ignore behavior).
     *
-    * Gated behind an EXECUTOR-side unseen-key probe: evolution can only
-    * add a column whose top-level name is new, so the batch's distinct
-    * `json_object_keys` set (codegen'd scan, no driver JSON parsing) is
-    * checked against the known columns first — steady state pays one
-    * short-circuiting aggregate per batch and the driver parses ZERO
-    * documents; only a genuinely novel key triggers the bounded
-    * driver-side sample + [[SchemaInfer]] pass.
+    * Evolution can only add a column whose top-level name is new, so
+    * the sample is drawn only from post-images that CARRY an unseen
+    * key, found executor-side by their `json_object_keys` (codegen'd
+    * scan, no driver JSON parsing). A rare new field therefore reaches
+    * inference wherever it sits in the batch, and steady state pays
+    * one filtered scan per batch while the driver parses ZERO
+    * documents.
     */
   private def maybeEvolve(upserts: DataFrame): IceliteTable = {
     if (cfg.mapping.mode != graft.config.MappingConfig.ModeAuto) return table
     val known = table.schema.fieldNames.toSeq
-    // malformed JSON → json_object_keys yields null → explode drops it;
-    // quarantine happens downstream in parseImages either way
-    val novel = upserts
-      .select(explode(expr("json_object_keys(fullDocument)")).as("k"))
-      .filter(!col("k").isin(known: _*))
-      .limit(1)
-    if (novel.isEmpty) return table
+    // malformed JSON → json_object_keys yields null → the row is not a
+    // carrier; quarantine happens downstream in parseImages either way
+    val carriers = upserts
+      .filter(exists(expr("json_object_keys(fullDocument)"), k => !k.isin(known: _*)))
+      .select("fullDocument").limit(SchemaInfer.DefaultSampleSize).collect()
+    if (carriers.isEmpty) return table
     driverInfers.incrementAndGet()
     val mapper = new ObjectMapper()
     // malformed post-images are skipped here and quarantined downstream
     // in parseImages — inference must not poison the batch first
-    val sample = upserts.select("fullDocument").limit(SchemaInfer.DefaultSampleSize)
-      .collect().iterator.flatMap(r => Option(r.getString(0)))
+    val sample = carriers.iterator.flatMap(r => Option(r.getString(0)))
       .flatMap(j => scala.util.Try(mapper.readTree(j)).toOption)
     val batchSchema = SchemaInfer.inferSample(sample)
     val newFields = batchSchema.fields.filterNot(f => table.schema.fieldNames.contains(f.name))
@@ -322,6 +324,9 @@ object ChangeStreamSync {
     StructField("clusterTime", TimestampType)))
 
   val ControlOps: Set[String] = Set("drop", "rename", "invalidate")
+
+  /** Row-level change operations; every other op is ignored. */
+  val ChangeOps: Seq[String] = Seq("insert", "update", "replace", "delete")
 
   /** Compact + expire the checkpoint table every this many committed
     * micro-batches (each batch writes one checkpoint upsert commit).

@@ -151,7 +151,7 @@ final class IceliteTable private (
           s"staged ${listed.size} files for $chunks ranges (empty range partition)")
       // one narrow job over the staged files: per-file (max id, rows) —
       // works for EVERY id type (footer stats would exclude timestamps)
-      val fileInfo = spark.read.parquet(abs(stagingRel))
+      val fileInfo = spark.read.schema(prepared.schema).parquet(abs(stagingRel))
         .groupBy(input_file_name().as("_f"))
         .agg(max(col(idCol)).as("_mx"), count(lit(1)).as("_n"))
         .collect()
@@ -351,11 +351,11 @@ final class IceliteTable private (
       val commitId = UUID.randomUUID().toString
       val encodeDv = udf((ps: Seq[Long]) => Dv.encode(ps.toArray))
       val dvPositions = udf((dv: Array[Byte]) => Dv.positions(dv).toSeq)
-      val coords = spark.read.parquet(coordFiles.map(abs): _*)
+      val coords = readKnown(PosDeleteSchema, coordFiles)
         .select(col(PosFileCol), col(PosCol))
       val all =
         if (prevDvs.isEmpty) coords
-        else coords.unionAll(spark.read.parquet(prevDvs.map(abs): _*)
+        else coords.unionAll(readKnown(DvSchema, prevDvs)
           .select(col(PosFileCol), explode(dvPositions(col(DvCol))).as(PosCol)))
       // coordinates of files no longer live are inert — drop them so a
       // DV generation never outlives the data it annotates
@@ -865,9 +865,11 @@ final class IceliteTable private (
   /** Merge-on-Read view (reference R3): data files minus equality
     * deletes. A row written at seq S survives unless some delete for its
     * key has delete-seq > S (a commit's own data survives its paired
-    * delete at the same seq). The delete side is aggregated to one row
-    * per key then broadcast — deletes are assumed small relative to
-    * data; compaction folds them in and resets this cost.
+    * delete at the same seq). The raw delete rows are broadcast into
+    * one conditional anti-join — deletes are assumed small relative to
+    * data; past the byte guard they are first folded to one row per
+    * key ([[applyDeletes]]). Compaction folds them in and resets this
+    * cost.
     */
   def read(): DataFrame = readSnapshots(cachedMeta.snapshots)
 
@@ -973,7 +975,7 @@ final class IceliteTable private (
   def readDeleteKeysSince(sinceSeq: Long): DataFrame = {
     requireNoPosDeletes(cachedMeta, "incremental delete feed", afterSeq = sinceSeq)
     val files = cachedMeta.snapshots.filter(_.seq > sinceSeq).flatMap(_.deleteFiles)
-    if (files.nonEmpty) spark.read.parquet(files.map(abs): _*)
+    if (files.nonEmpty) readEqDeletes(files)
     else {
       val schema = cachedMeta.properties.get(DeleteKeyColumnsProp) match {
         case Some(cols) =>
@@ -1044,14 +1046,14 @@ final class IceliteTable private (
     val posInRange = inRange.flatMap(_.posDeleteFiles)
     val posAll = m.snapshots.filter(_.seq <= toSeq).flatMap(_.posDeleteFiles)
     def resolvePos(posFiles: Seq[String]): DataFrame = {
-      val coords = spark.read.parquet(posFiles.map(abs): _*)
+      val coords = readKnown(PosDeleteSchema, posFiles)
         .select(col(PosFileCol), col(PosCol), col(SeqCol).as("_pos_seq"))
       val referenced = coords.select(col(PosFileCol)).distinct()
         .collect().map(_.getString(0)).toSet // bounded by table file count
       val files = m.snapshots.filter(_.seq <= toSeq).flatMap(_.dataFiles)
         .filter(referenced.contains)
       readFilesAs(files, m.schema, Long.MaxValue, withPos = true)
-        .join(deleteSide(coords, posFiles), Seq(PosFileCol, PosCol))
+        .join(deleteSide(coords, estimateBytes(posFiles)), Seq(PosFileCol, PosCol))
     }
     val payloadCols = m.schema.fieldNames.toSeq
     def emit(df: DataFrame, tpe: Column, seqCol: Column): DataFrame =
@@ -1103,7 +1105,7 @@ final class IceliteTable private (
       else Some(resolvePos(posAll)
         .select(keyCols.map(col) :+ col("_pos_seq"): _*).localCheckpoint())
     val delInRange = if (delFilesInRange.isEmpty) emptyKeyed
-      else spark.read.parquet(delFilesInRange.map(abs): _*)
+      else readEqDeletes(delFilesInRange)
     val affectedKeySrc = resolvedPos match {
       case Some(rp) => delInRange.select(keyCols.map(col): _*)
         .unionByName(rp.filter(col("_pos_seq") > fromSeq).select(keyCols.map(col): _*))
@@ -1116,7 +1118,7 @@ final class IceliteTable private (
       (pruneConjunctive(hist, _.dataFiles, bounds),
         pruneConjunctive(hist, _.deleteFiles, bounds))
     val delAll = if (histDelFiles.isEmpty) emptyKeyed
-      else spark.read.parquet(histDelFiles.map(abs): _*)
+      else readEqDeletes(histDelFiles)
 
     // keys never deleted in range: plain inserts, no history needed
     val plainInserts = emit(
@@ -1167,15 +1169,13 @@ final class IceliteTable private (
     plainInserts.unionByName(posts).unionByName(pres)
   }
 
-  /** MoR survivor filter shared by every read path: a row survives
-    * unless some delete for its key carries a later seq.
-    */
   /** Delete-side join strategy guard: the MoR merge broadcasts the
-    * aggregated delete set while its at-rest bytes stay under this
-    * bound, and falls back to a shuffle join past it — a churn-heavy
-    * table between compactions must degrade to a (correct, slower)
-    * shuffle, not blow the executor broadcast limit. Compaction folds
-    * deletes away and restores the broadcast path.
+    * delete set while its at-rest bytes stay under this bound, and
+    * past it folds the set to one row per key and falls back to a
+    * shuffle join — a churn-heavy table between compactions must
+    * degrade to a (correct, slower) shuffle, not blow the executor
+    * broadcast limit. Compaction folds deletes away and restores the
+    * broadcast path.
     */
   private[table] var maxBroadcastDeleteBytes: Long = 256L << 20
 
@@ -1184,10 +1184,6 @@ final class IceliteTable private (
     * estimate into a broadcast-size estimate.
     */
   private[table] var estDeleteKeyRowBytes: Long = 64L
-
-  // at-rest byte totals per delete-file list (immutable once committed)
-  // — one getFileStatus sweep per list, not per read
-  private val deleteBytesMemo = scala.collection.mutable.Map.empty[Seq[String], Long]
 
   /** Distinct key-tuple estimate from the latest ANALYZE snapshot:
     * per-column KMV NDVs, product-combined for composite keys (the
@@ -1206,45 +1202,52 @@ final class IceliteTable private (
     }
 
   /** Delete-side join strategy: prefer the ANALYZE stats estimate
-    * when one covers the key columns — the AGGREGATED delete set has
-    * at most ~NDV(key) rows, so a churn-heavy table whose raw delete
+    * when one covers the key columns — the FOLDED delete set has at
+    * most ~NDV(key) rows, so a churn-heavy table whose raw delete
     * files exceed the byte guard (the same key rewritten thousands of
     * times) still broadcasts the small folded set; fall back to the
     * at-rest byte threshold when no stats snapshot speaks. `keyCols`
     * is None for position deletes (coordinates have no column stats).
     */
   private def deleteSide(
-      dels: DataFrame, files: Seq[String],
-      keyCols: Option[Seq[String]] = None): DataFrame =
-    keyCols.flatMap(statsKeyNdv) match {
-      case Some(ndv) =>
-        if (ndv <= maxBroadcastDeleteBytes / estDeleteKeyRowBytes) broadcast(dels)
-        else dels
-      case None =>
-        // filesystem sweep OUTSIDE the lock, and a hit never evicts — the
-        // cap only bounds growth across distinct (i.e. new-commit) lists
-        val bytes = deleteBytesMemo.synchronized(deleteBytesMemo.get(files)).getOrElse {
-          val b = estimateBytes(files)
-          deleteBytesMemo.synchronized {
-            if (!deleteBytesMemo.contains(files) && deleteBytesMemo.size > 64)
-              deleteBytesMemo.clear()
-            deleteBytesMemo.update(files, b)
-          }
-          b
-        }
-        if (bytes <= maxBroadcastDeleteBytes) broadcast(dels) else dels
+      dels: DataFrame, bytes: Long, keyCols: Option[Seq[String]] = None): DataFrame = {
+    val fits = keyCols.flatMap(statsKeyNdv) match {
+      case Some(ndv) => ndv <= maxBroadcastDeleteBytes / estDeleteKeyRowBytes
+      case None => bytes <= maxBroadcastDeleteBytes
     }
+    if (fits) broadcast(dels) else dels
+  }
 
+  /** MoR survivor filter shared by every read path (the Iceberg scan
+    * rule): a row written at seq S is dropped by an equality delete
+    * for its key with seq > S, so a commit's own data survives its
+    * paired delete at the same seq. One conditional anti-join,
+    * `data LEFT ANTI JOIN dels ON keys AND dels.seq > data.seq`, over
+    * the raw delete rows — no aggregate, so no shuffle stage ahead of
+    * the broadcast. Past [[maxBroadcastDeleteBytes]] the delete rows
+    * are first folded to the per-key max seq, which keeps the answer
+    * and bounds the join side by the key count. NULL keys never match,
+    * so NULL-keyed rows survive.
+    */
   private def applyDeletes(data: DataFrame, deleteFiles: Seq[String]): DataFrame =
     if (deleteFiles.isEmpty) data
     else {
-      val keyCols = keyColumnsOfDeletes(deleteFiles)
-      val dels = spark.read.parquet(deleteFiles.map(abs): _*)
-        .groupBy(keyCols.map(col): _*)
-        .agg(max(col(SeqCol)).as("_max_del_seq"))
-      data.join(deleteSide(dels, deleteFiles, Some(keyCols)), keyCols, "left")
-        .filter(col("_max_del_seq").isNull || col(SeqCol) >= col("_max_del_seq"))
-        .drop("_max_del_seq")
+      val delSchema = footerSchema(deleteFiles.head)
+      val keyCols = delSchema.fieldNames.filterNot(_ == SeqCol).toSeq
+      val bytes = estimateBytes(deleteFiles)
+      val raw = readKnown(delSchema, deleteFiles)
+      val dels =
+        if (bytes > maxBroadcastDeleteBytes)
+          raw.groupBy(keyCols.map(col): _*).agg(max(col(SeqCol)).as(DelSeqCol))
+        else raw.withColumnRenamed(SeqCol, DelSeqCol)
+      // delete-side keys renamed apart so the condition resolves each
+      // name to exactly one side
+      val delKey = keyCols.indices.map(i => s"_del_key_$i")
+      val side = dels.select(keyCols.zip(delKey).map { case (k, d) => col(k).as(d) } :+
+        col(DelSeqCol): _*)
+      val on = keyCols.zip(delKey).map { case (k, d) => col(k) === col(d) }
+        .reduce(_ && _) && col(DelSeqCol) > col(SeqCol)
+      data.join(deleteSide(side, bytes, Some(keyCols)), on, "left_anti")
     }
 
   /** Remove position-deleted PHYSICAL rows: anti-join on the
@@ -1256,9 +1259,10 @@ final class IceliteTable private (
   private def applyPosDeletes(data: DataFrame, posDeleteFiles: Seq[String]): DataFrame =
     if (posDeleteFiles.isEmpty) data
     else {
-      val dels = spark.read.parquet(posDeleteFiles.map(abs): _*)
+      val dels = readKnown(PosDeleteSchema, posDeleteFiles)
         .select(col(PosFileCol), col(PosCol)).dropDuplicates(PosFileCol, PosCol)
-      data.join(deleteSide(dels, posDeleteFiles), Seq(PosFileCol, PosCol), "left_anti")
+      data.join(deleteSide(dels, estimateBytes(posDeleteFiles)),
+        Seq(PosFileCol, PosCol), "left_anti")
     }
 
   /** Effective position-delete state for a snapshot scope: the NEWEST
@@ -1312,10 +1316,8 @@ final class IceliteTable private (
     if (dvFiles.isEmpty) data
     else {
       import org.apache.spark.sql.graftbridge.ColumnBridge
-      val dvs0 = spark.read.parquet(dvFiles.map(abs): _*)
-        .select(col(PosFileCol), col(DvCol))
-      val dvs =
-        if (estimateBytes(dvFiles) <= maxBroadcastDeleteBytes) broadcast(dvs0) else dvs0
+      val dvs = deleteSide(
+        readKnown(DvSchema, dvFiles).select(col(PosFileCol), col(DvCol)), estimateBytes(dvFiles))
       val hit = ColumnBridge.column(DvContains(
         ColumnBridge.expression(col(DvCol)), ColumnBridge.expression(col(PosCol))))
       data.join(dvs, Seq(PosFileCol), "left")
@@ -3767,13 +3769,21 @@ final class IceliteTable private (
     * the probe forward, and only then is the new head actually read.
     * Sound because version numbers are monotone (truncate commits a
     * snapshot, never resets numbering) and expiry deletes only OLD
-    * versions — a newer head can never live at a lower number.
+    * versions — a newer head can never live at a lower number. The one
+    * case the forward probe cannot see is a handle so stale that
+    * another handle's expiry deleted its version and the ones after
+    * it: the probe then finds no successor, yet publishing at
+    * cached + 1 would land below the real head. A missing cached
+    * version file is exactly that case, and falls back to the full
+    * listing.
     */
   private def loadHeadFast(fs: FileSystem): (TableMeta, Long) = {
     val known = cachedHead
+    def exists(v: Long) = fs.exists(new Path(s"$location/metadata/${versionFile(v)}"))
     var v = known.version
-    while (fs.exists(new Path(s"$location/metadata/${versionFile(v + 1)}"))) v += 1
-    if (v == known.version) (known.meta, v)
+    while (exists(v + 1)) v += 1
+    if (v == known.version)
+      if (exists(v)) (known.meta, v) else loadHead(fs, location, manifestPaths)
     else
       try (TableMeta.fromJson(
         readString(fs, new Path(s"$location/metadata/${versionFile(v)}")),
@@ -4455,7 +4465,8 @@ final class IceliteTable private (
 
   private def loadBlooms(): Map[String, Array[Byte]] = {
     if (!fileSystem().exists(new Path(bloomsDir))) return Map.empty
-    spark.read.option("recursiveFileLookup", "true").parquet(bloomsDir)
+    spark.read.schema(BloomStoreSchema).option("recursiveFileLookup", "true")
+      .parquet(bloomsDir)
       .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
   }
 
@@ -4488,7 +4499,7 @@ final class IceliteTable private (
     // the absolute input_file_name maps back to the metadata-relative
     // path by basename alone
     val byBase = target.map(rel => rel.split('/').last -> rel).toMap
-    val built = spark.read.parquet(target.map(abs): _*)
+    val built = readFilesAs(target, StructType(Seq(f)), Long.MaxValue)
       .select(input_file_name().as("f"), kExpr.as("k"))
       .groupBy(col("f"))
       .agg(graft.functions.BloomFilterFns.bloomBuild(col("k"), expectedPerFile, fpp)
@@ -4552,9 +4563,19 @@ final class IceliteTable private (
       .select(m.schema.fieldNames.map(col).toSeq: _*)
   }
 
+  /** At-rest bytes of committed files: the sizes recorded in snapshot
+    * `fileMetrics` at commit time, one `getFileStatus` only for a file
+    * committed without them (position-delete and DV files, older
+    * commits). Committed files are immutable, so any snapshot's record
+    * holds.
+    */
   private def estimateBytes(files: Seq[String]): Long = {
-    val fs = fileSystem()
-    files.map(f => fs.getFileStatus(new Path(abs(f))).getLen).sum
+    val wanted = files.toSet
+    val recorded = cachedMeta.snapshots.iterator
+      .flatMap(_.fileMetrics.iterator.filter { case (f, _) => wanted(f) })
+      .map { case (f, (_, bytes)) => f -> bytes }.toMap
+    lazy val fs = fileSystem()
+    files.map(f => recorded.getOrElse(f, fs.getFileStatus(new Path(abs(f))).getLen)).sum
   }
 
   /** Date-based transforms (`date_format`) render under the SESSION
@@ -4695,11 +4716,43 @@ final class IceliteTable private (
     graft.util.Phase.timed("plan.smallBatchStats")(
       d.queryExecution.optimizedPlan.stats.sizeInBytes <= SmallWriteBytes)
 
-  private def keyColumnsOfDeletes(deleteFiles: Seq[String]): Seq[String] = {
-    // all delete files share the key schema by construction — one
-    // footer read, not a listing of every live delete file
-    val delSchema = spark.read.parquet(abs(deleteFiles.head)).schema
-    delSchema.fieldNames.filterNot(_ == SeqCol).toSeq
+  // all equality-delete files share the key schema by construction —
+  // one footer read, not a listing of every live delete file
+  private def keyColumnsOfDeletes(deleteFiles: Seq[String]): Seq[String] =
+    footerSchema(deleteFiles.head).fieldNames.filterNot(_ == SeqCol).toSeq
+
+  /** Read files this table wrote at a schema it already knows. A bare
+    * `spark.read.parquet` infers the schema with a parallel footer-merge
+    * Spark job on every call — inside a SQL read that job runs while the
+    * outer query is still being planned.
+    */
+  private def readKnown(schema: StructType, files: Seq[String]): DataFrame =
+    spark.read.schema(schema).parquet(files.map(abs): _*)
+
+  /** Equality-delete files (key columns + [[SeqCol]]) at their stored schema. */
+  private def readEqDeletes(files: Seq[String]): DataFrame =
+    readKnown(footerSchema(files.head), files)
+
+  /** Spark schema of one parquet file from its footer, read on the
+    * driver: the Spark row metadata the writer stored, else the parquet
+    * message type converted the way Spark's own inference converts it.
+    * Fields are nullable, as in an inferred file-source schema.
+    */
+  private def footerSchema(rel: String): StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new Path(abs(rel)), spark.sparkContext.hadoopConfiguration)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val stored = try {
+      val fm = reader.getFooter.getFileMetaData
+      Option(fm.getKeyValueMetaData.get(SparkRowMetadataKey))
+        .flatMap(json => scala.util.Try(
+          org.apache.spark.sql.types.DataType.fromJson(json).asInstanceOf[StructType]).toOption)
+        .getOrElse(new ParquetToSparkSchemaConverter(
+          org.apache.spark.sql.internal.SQLConf.get)
+          .convert(fm.getSchema))
+    } finally reader.close()
+    StructType(stored.fields.map(_.copy(nullable = true)))
   }
 }
 
@@ -4860,6 +4913,26 @@ object IceliteTable {
 
   /** Deleted-position count column of a deletion-vector file row. */
   val DvCountCol = "_graft_dv_count"
+
+  /** Stored schema of every position-delete file (coordinates plus the
+    * deleting commit's seq) and of every deletion-vector file. Both are
+    * fixed by their writers, so reads pass them instead of inferring.
+    */
+  private val PosDeleteSchema: StructType = new StructType()
+    .add(PosFileCol, "string").add(PosCol, "long").add(SeqCol, "long")
+  private val DvSchema: StructType = new StructType()
+    .add(PosFileCol, "string").add(DvCol, "binary").add(DvCountCol, "long")
+
+  /** Stored schema of the key-bloom store files (see `buildKeyBlooms`). */
+  private val BloomStoreSchema: StructType =
+    new StructType().add("file", "string").add("bloom", "binary")
+
+  /** Footer key under which Spark's parquet writer stores the row schema. */
+  private val SparkRowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Delete-side seq column of the equality-delete anti-join: the raw
+    * delete row's seq, or the per-key max once folded. */
+  private val DelSeqCol = "_max_del_seq"
 
   /** Row-level outcome of a [[IceliteTable.merge]] commit. */
   final case class MergeStats(seq: Long, inserted: Long, updated: Long, deleted: Long)

@@ -33,7 +33,13 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     * [[QueryExecutionListener]] observes. A round is a `localCheckpoint`
     * whose plan holds a join — the 1-row seed/source cuts have none.
     */
-  private def roundPlans(name: String): Seq[String] = {
+  private def roundPlans(name: String): Seq[String] =
+    cutPlans(SparkEntry.queries(name)(spark, dir))
+
+  /** [[roundPlans]] of an arbitrary build step, such as an index build
+    * that a query's memoized read runs only once per session.
+    */
+  private def cutPlans(build: => Any): Seq[String] = {
     val cuts = new ConcurrentLinkedQueue[String]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -44,7 +50,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     ListenerFlush.flush(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
-      SparkEntry.queries(name)(spark, dir)
+      build
       ListenerFlush.flush(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     cuts.asScala.toSeq.filter(_.contains("Join"))
@@ -285,14 +291,25 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
 
   test("corpus order: distributed numbering leaves no single-partition exchange in the plan") {
     val p = planOf("corpus_order")
-    assert(!p.contains("SinglePartition"), s"single-task funnel in corpus_order:\n$p")
-    assert(!p.contains("CartesianProduct"))
+    // the range sort and the kept-corpus pipeline run in earlier eager
+    // lineage cuts; the final plan starts after them
+    val cuts = roundPlans("corpus_order")
+    assert(cuts.nonEmpty, "corpus_order ran no lineage cut with a join")
+    for (r <- p +: cuts) {
+      assert(!r.contains("SinglePartition"), s"single-task funnel in corpus_order:\n$r")
+      assert(!r.contains("CartesianProduct"), r)
+    }
   }
 
   test("fused IVF-PQ: ADC lookup broadcasts; no cartesian product") {
     val p = planOf("sim_topk_ivfpq")
     assert(p.contains("BroadcastHashJoin"), s"ADC lookup join not broadcast:\n$p")
-    assert(!p.contains("CartesianProduct"))
+    // the query reads the persisted PQ index, built once per session
+    // by Lloyd rounds that are each an eager lineage cut: read those
+    val cuts = cutPlans(Similarity.pqTrain(spark, dir))
+    assert(cuts.size == Similarity.PqIters - 1,
+      s"expected ${Similarity.PqIters - 1} PQ training rounds, saw ${cuts.size}")
+    for (r <- p +: cuts) assert(!r.contains("CartesianProduct"), r)
   }
 
   test("edit-distance dedup joins through the shingle index, never a cross join") {

@@ -1,5 +1,7 @@
 package graft.sql
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -265,5 +267,43 @@ class IceliteCatalogSpec extends AnyFunSuite with SparkFixture {
       spark.sql(s"ALTER TABLE $cat.ns.t_widen ALTER COLUMN n SET NOT NULL"))
     assert(e.getMessage.contains("SET NOT NULL") &&
       e.getMessage.contains("1 existing row"), e.getMessage)
+  }
+
+  test("a SQL _id point read over equality deletes plans with no schema-inference job") {
+    import spark.implicits._
+    val df = (1L to 200L).map(i => (i, s"s${i % 3}", i * 10L)).toDF("_id", "cat", "v")
+    val t = IceliteTable.create(spark, wh, "ns", "t_point", df.schema)
+    t.append(df)
+    t.upsert((1L to 200L by 7).map(i => (i, "up", i * 100L)).toDF("_id", "cat", "v"), Seq("_id"))
+    t.delete((1L to 200L by 5).toDF("_id"), Seq("_id"))
+    assert(t.meta.snapshots.exists(_.deleteFiles.nonEmpty))
+    def point(id: Long) = spark.sql(s"SELECT _id, v FROM $cat.ns.t_point WHERE _id = $id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    point(3L) // warm-up: first-use class loading and catalog registration
+    val sc = spark.sparkContext
+    // the stage names (call sites) of every job one point read runs
+    def jobsOf(id: Long): (Seq[(Long, Long)], Seq[String]) = {
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.add(e.stageInfos.map(_.name).mkString("; "))
+      }
+      org.apache.spark.graft.ListenerFlush.flush(sc)
+      sc.addSparkListener(listener)
+      val got = try point(id) finally {
+        org.apache.spark.graft.ListenerFlush.flush(sc)
+        sc.removeSparkListener(listener)
+      }
+      (got, jobs.asScala.toSeq)
+    }
+    // an upserted key, a deleted key and an untouched key
+    for ((id, want) <- Seq(8L -> Seq((8L, 800L)), 11L -> Nil, 12L -> Seq((12L, 120L)))) {
+      val (got, jobs) = jobsOf(id)
+      assert(got == want)
+      // a schema-inference job's call site is the `parquet` reader call
+      assert(!jobs.exists(_.contains("parquet at")),
+        s"schema inference ran for _id = $id:\n${jobs.mkString("\n")}")
+      assert(jobs.size <= 2, s"_id = $id ran ${jobs.size} jobs:\n${jobs.mkString("\n")}")
+    }
   }
 }

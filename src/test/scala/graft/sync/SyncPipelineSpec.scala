@@ -232,6 +232,65 @@ class SyncPipelineSpec extends AnyFunSuite with SparkFixture {
     assert(rows.take(3).forall(_.isNullAt(1)) && rows.last.getString(1) == "WELCOME")
   }
 
+  test("schema evolution: a rare new field past the first 1,000 upserts of a batch is kept") {
+    val root = Files.createTempDirectory("sync-fix")
+    val wh = Files.createTempDirectory("sync-wh").toString
+    val cfg = config(root, wh)
+    val c = cfg.sync.collections.head
+    writeFixture(root, "shop", "orders", (1 to 3).map(i => doc(i, s"$i.00", "gold")))
+    val orch = new SyncOrchestrator(spark, cfg, wh)
+    val table = orch.syncCollection(c, Files.createTempDirectory("ck").toString)
+    // 2,400 inserts in one micro-batch; only the last (highest key, last
+    // seq) carries the new top-level field
+    val n = 2400
+    val carrier = n + 3
+    val carrierDoc =
+      s"""{"_id":{"$$oid":"${oid(carrier)}"},"total":{"$$numberDecimal":"1.00"},"customer":{"name":"cc","tier":"x"},"orderDate":{"$$date":"2024-03-01T00:00:00Z"},"coupon":"RARE"}"""
+    writeChanges(root, "shop", "orders", "b0", (4 to carrier).map { i =>
+      val d = if (i == carrier) carrierDoc else doc(i, s"$i.00", "new")
+      s"""{"seq":${i - 3},"op":"insert","_id":"${oid(i)}","fullDocument":${jstr(d)},"clusterTime":"2024-03-01T00:00:00.000Z"}"""
+    })
+    val changes = new ChangeStreamSync(spark, c, table, orch.checkpoints, "shop")
+    val batch = spark.read.schema(ChangeStreamSync.EventSchema)
+      .json(root.resolve("shop/orders.changes").toString)
+    changes.processBatch(batch, batchId = 1000)
+    assert(table.schema.fieldNames.contains("coupon"), "the rare field never became a column")
+    val coupons = table.read().filter(col("coupon").isNotNull)
+      .select("_id", "coupon").collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(coupons == Seq((oid(carrier), "RARE")))
+    assert(table.read().count() == 3 + n)
+  }
+
+  test("sync metrics: change events count every consumed event, not the keys they fold to") {
+    val root = Files.createTempDirectory("sync-fix")
+    val wh = Files.createTempDirectory("sync-wh").toString
+    val cfg = config(root, wh)
+    val c = cfg.sync.collections.head
+    writeFixture(root, "shop", "orders", (1 to 3).map(i => doc(i, s"$i.00", "gold")))
+    val orch = new SyncOrchestrator(spark, cfg, wh)
+    val table = orch.syncCollection(c, Files.createTempDirectory("ck").toString)
+    // five events over three keys: oid(1) updated three times
+    writeChanges(root, "shop", "orders", "b0", Seq(
+      s"""{"seq":1,"op":"update","_id":"${oid(1)}","fullDocument":${jstr(doc(1, "10.00", "plat"))},"clusterTime":"2024-02-01T00:00:00.000Z"}""",
+      s"""{"seq":2,"op":"update","_id":"${oid(1)}","fullDocument":${jstr(doc(1, "20.00", "plat"))},"clusterTime":"2024-02-01T00:00:01.000Z"}""",
+      s"""{"seq":3,"op":"delete","_id":"${oid(2)}","fullDocument":null,"clusterTime":"2024-02-01T00:00:02.000Z"}""",
+      s"""{"seq":4,"op":"replace","_id":"${oid(1)}","fullDocument":${jstr(doc(1, "30.00", "plat"))},"clusterTime":"2024-02-01T00:00:03.000Z"}""",
+      s"""{"seq":5,"op":"insert","_id":"${oid(7)}","fullDocument":${jstr(doc(7, "7.00", "new"))},"clusterTime":"2024-02-01T00:00:04.000Z"}"""))
+    val metrics = new SyncMetrics
+    val changes = new ChangeStreamSync(spark, c, table, orch.checkpoints, "shop", metrics)
+    val batch = spark.read.schema(ChangeStreamSync.EventSchema)
+      .json(root.resolve("shop/orders.changes").toString)
+    changes.processBatch(batch, batchId = 1000)
+    assert(metrics.of("analytics.orders").changeEvents.sum() == 5)
+    val state = table.read().orderBy("_id").collect()
+      .map(r => r.getString(0) -> r.getDecimal(1).toPlainString).toSeq
+    assert(state == Seq(oid(1) -> "30.000000000", oid(3) -> "3.000000000",
+      oid(7) -> "7.000000000"))
+    // a replayed batch consumes nothing
+    changes.processBatch(batch, batchId = 1001)
+    assert(metrics.of("analytics.orders").changeEvents.sum() == 5)
+  }
+
   test("invalidate control event forces re-initial-sync (R7)") {
     val root = Files.createTempDirectory("sync-fix")
     val wh = Files.createTempDirectory("sync-wh").toString

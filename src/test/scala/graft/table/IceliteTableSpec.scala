@@ -787,4 +787,60 @@ class IceliteTableSpec extends AnyFunSuite with SparkFixture {
       t.estDeleteKeyRowBytes = savedRowBytes
     }
   }
+
+  test("equality deletes: the raw broadcast anti-join and the folded shuffle path agree") {
+    val wh = freshWarehouse()
+    val t = IceliteTable.create(spark, wh, "ns", "eqpaths", docSchema)
+    t.append(rows(
+      ("a", 1.0, "new", "2024-01-01T00:00:00Z"),
+      ("b", 2.0, "new", "2024-01-01T00:00:00Z"),
+      ("c", 3.0, "new", "2024-01-01T00:00:00Z"),
+      (null, 4.0, "nokey", "2024-01-01T00:00:00Z")))
+    // same-seq upsert pair: the new image of "a" survives its own delete
+    t.upsert(rows(("a", 10.0, "paid", "2024-01-02T00:00:00Z")), Seq("_id"))
+    // repeated deletes of one key, one of them after a re-insert
+    t.delete(rows(("b", 0.0, "", "2024-01-03T00:00:00Z")).select("_id"), Seq("_id"))
+    t.upsert(rows(("b", 20.0, "back", "2024-01-04T00:00:00Z")), Seq("_id"))
+    t.delete(rows(("b", 0.0, "", "2024-01-05T00:00:00Z")).select("_id"), Seq("_id"))
+    t.delete(rows(("b", 0.0, "", "2024-01-06T00:00:00Z")).select("_id"), Seq("_id"))
+    // a NULL delete key matches nothing; the NULL-keyed row survives
+    t.delete(rows((null, 0.0, "", "2024-01-07T00:00:00Z")).select("_id"), Seq("_id"))
+    t.upsert(rows(("c", 30.0, "paid", "2024-01-08T00:00:00Z")), Seq("_id"))
+    val expected = Seq(
+      (null, 4.0, "nokey"), ("a", 10.0, "paid"), ("c", 30.0, "paid"))
+    def state = t.read().orderBy("_id").collect()
+      .map(r => (r.getString(0), r.getDouble(1), r.getString(2))).toSeq
+    def plan = t.read().queryExecution.optimizedPlan.toString
+    assert(state == expected)
+    assert(plan.contains("strategy=broadcast") && !plan.contains("Aggregate"),
+      s"under the byte guard the raw delete rows broadcast unfolded:\n$plan")
+    val saved = t.maxBroadcastDeleteBytes
+    try {
+      t.maxBroadcastDeleteBytes = 1L
+      assert(plan.contains("Aggregate") && !plan.contains("strategy=broadcast"),
+        s"past the byte guard the delete rows fold and lose the hint:\n$plan")
+      assert(state == expected, "the folded path must read identically")
+      val travelled = t.readAt(3).orderBy("_id").collect().map(_.getString(0)).toSeq
+      assert(travelled == Seq(null, "a", "c"))
+    } finally t.maxBroadcastDeleteBytes = saved
+    assert(t.readAt(3).orderBy("_id").collect().map(_.getString(0)).toSeq ==
+      Seq(null, "a", "c"))
+  }
+
+  test("a stale handle's commit lands at the real head after another handle's expiry") {
+    val wh = freshWarehouse()
+    val a = IceliteTable.create(spark, wh, "ns", "stale", docSchema)
+    a.append(rows(("a", 1.0, "new", "2024-01-01T00:00:00Z")))
+    val b = IceliteTable.load(spark, wh, "ns", "stale")
+    (1 to 3).foreach(i =>
+      b.upsert(rows((s"b$i", i.toDouble, "new", "2024-01-02T00:00:00Z")), Seq("_id")))
+    b.compact()
+    // every version handle A knows of, and its successors, are gone
+    assert(b.expireSnapshots(keepVersions = 1) > 0)
+    a.append(rows(("late", 9.0, "new", "2024-01-03T00:00:00Z")))
+    val fresh = IceliteTable.load(spark, wh, "ns", "stale")
+    assert(fresh.read().orderBy("_id").collect().map(_.getString(0)).toSeq ==
+      Seq("a", "b1", "b2", "b3", "late"), "the stale handle's append was lost")
+    assert(fresh.meta.lastSeq == a.meta.lastSeq)
+  }
 }
