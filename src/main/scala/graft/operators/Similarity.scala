@@ -691,7 +691,7 @@ object Similarity {
          |      SELECT 1 FROM $prev s
          |      WHERE s.q_id = c.q_id AND s.vec_id = c.vec_id)) x
          |  WHERE rn = 1),
-         |sel$k AS (SELECT * FROM $prev UNION ALL SELECT * FROM p$k)""".stripMargin
+         |sel$k AS MATERIALIZED (SELECT * FROM $prev UNION ALL SELECT * FROM p$k)""".stripMargin
     }.mkString(",\n")
     s"""${ivfScoredCteSql(NumQueries)},
        |cpool AS (
@@ -700,7 +700,7 @@ object Similarity {
        |      row_number() OVER (PARTITION BY q_id
        |        ORDER BY cosine DESC, vec_id) AS rn
        |    FROM scored) x WHERE rn <= $MmrPool),
-       |cp AS (
+       |cp AS MATERIALIZED (
        |  SELECT a.q_id, a.vec_id AS av, b.vec_id AS bv,
        |    round(
        |      CAST(sum(CAST(CAST(ea.val AS DOUBLE) * CAST(eb.val AS DOUBLE) AS DECIMAL(38,20))) AS DOUBLE)
@@ -712,7 +712,7 @@ object Similarity {
        |  JOIN norms na ON na.vec_id = a.vec_id
        |  JOIN norms nb ON nb.vec_id = b.vec_id
        |  GROUP BY 1, 2, 3),
-       |sel1 AS (
+       |sel1 AS MATERIALIZED (
        |  SELECT q_id, vec_id, cosine, 1 AS pick FROM (
        |    SELECT q_id, vec_id, cosine,
        |      row_number() OVER (PARTITION BY q_id

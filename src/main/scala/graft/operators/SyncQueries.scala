@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{GreaterThanOrEqual, In, LessThanOrEqual}
 
 import graft.GraftQuery
 import graft.Tables.t
@@ -132,7 +133,7 @@ object SyncQueries {
     * (delete wins over update), and unmatched rows insert only under
     * the insert condition. DuckDB recomputes the final table state
     * with the equivalent outer-join + union. The merge target scan is
-    * key-range pruned ([[IceliteTable.readForKeyRange]]); correctness
+    * key-range pruned ([[IceliteTable.scan]]); correctness
     * here is also the standing proof that pruning loses no rows.
     */
   def tableMerge(spark: SparkSession, dir: String): DataFrame = {
@@ -787,7 +788,7 @@ object SyncQueries {
       |  CAST(abs(e - x) AS BIGINT) AS abs_err
       |FROM q, est, ex""".stripMargin
 
-  /** Bloom point lookup ([[IceliteTable.readForKeys]]): four
+  /** Bloom point lookup ([[IceliteTable.planFiles]]): four
     * HASH-SCATTERED appends (every file spans the full key range, so
     * min/max bounds prune NOTHING — the case blooms exist for), per-
     * file key blooms built once, a keyed DELETE of the smallest probe
@@ -810,7 +811,7 @@ object SyncQueries {
     table.delete(
       sub.filter(col("o_orderkey") === probes.head).select("o_orderkey"),
       Seq("o_orderkey"))
-    table.readForKeys(probes.map(Long.box))
+    table.scan(Seq(In("o_orderkey", probes.map(Long.box).toArray)))
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       .orderBy("o_orderkey")
   }
@@ -865,7 +866,7 @@ object SyncQueries {
       |FROM g JOIN b USING (name) LEFT JOIN c ON g.name = c.name AND g.bucket = c.bucket
       |ORDER BY "column", bucket""".stripMargin
 
-  /** General predicate file skipping ([[IceliteTable.readStatRange]]):
+  /** General predicate file skipping ([[IceliteTable.planFiles]]):
     * stats DECLARED on a non-key column (`trackStats`, the Iceberg
     * `write.metadata.metrics` shape), four range-banded appends so the
     * files carry disjoint custkey bounds, a keyed DELETE in the middle
@@ -890,7 +891,7 @@ object SyncQueries {
     table.delete(
       sub.filter(pmod(col("o_orderkey"), lit(70)) === 0).select("o_orderkey"),
       Seq("o_orderkey"))
-    table.readStatRange("o_custkey", Some(1L), Some(band))
+    table.scan(Seq(GreaterThanOrEqual("o_custkey", 1L), LessThanOrEqual("o_custkey", band)))
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       .orderBy("o_orderkey")
   }
@@ -1484,7 +1485,7 @@ object SyncQueries {
     * icelite table, a z-order compaction clusters files on
     * (o_orderkey, o_custkey), then a conjunctive 2-D box read prunes
     * on BOTH dimensions' footer stats before the exact row filter
-    * ([[IceliteTable.readZBox]]) — the layout property that
+    * ([[IceliteTable.planFiles]]) — the layout property that
     * distinguishes z-order from a plain sort (a box skips files on
     * every dimension at once), verified against DuckDB computing the
     * same box directly. The companion spec asserts the box keeps
@@ -1499,9 +1500,9 @@ object SyncQueries {
     table.append(src)
     table.compact(targetFileMB = 256, zorderBy = Seq("o_orderkey", "o_custkey"),
       numFilesOverride = Some(16))
-    table.readZBox(Seq(
-      ("o_orderkey", Some(0L), Some(40000L)),
-      ("o_custkey", Some(100L), Some(200L))))
+    table.scan(Seq(
+      GreaterThanOrEqual("o_orderkey", 0L), LessThanOrEqual("o_orderkey", 40000L),
+      GreaterThanOrEqual("o_custkey", 100L), LessThanOrEqual("o_custkey", 200L)))
       .orderBy("o_orderkey")
   }
 
@@ -1746,7 +1747,7 @@ object SyncQueries {
     (0 until 4).foreach(i =>
       table.append(o.filter(pmod(col("o_orderkey"), lit(4)) === i)))
     table.compact(targetFileMB = 256, Nil, numFilesOverride = Some(4))
-    table.readStatRange("cents", Some(1000000L), Some(2000000L))
+    table.scan(Seq(GreaterThanOrEqual("cents", 1000000L), LessThanOrEqual("cents", 2000000L)))
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("sum_cents"))
       .orderBy("o_orderpriority")

@@ -13,7 +13,6 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -35,8 +34,9 @@ import graft.table.IceliteTable
   * row reader.
   *
   * Scale/pushdown: the analyzer pushes filters and required columns
-  * into [[IceliteScanBuilder]], which folds them into the MoR
-  * DataFrame BEFORE it compiles — so predicates reach the underlying
+  * into [[IceliteScanBuilder]], which hands them to
+  * [[IceliteTable.scan]] BEFORE the MoR DataFrame compiles — so files
+  * are planned from table metadata and predicates reach the underlying
   * parquet scans (footer stats + page pruning) exactly as they do on
   * the programmatic path, and column pruning shrinks the read schema
   * end to end. Handled filters are also re-evaluated by Spark above
@@ -626,17 +626,17 @@ final class IceliteSparkTable(table: IceliteTable) extends Table
   override def truncateTable(): Boolean = { table.truncate(); true }
 
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    filters.forall(f => IceliteScanBuilder.toColumn(f).isDefined)
+    filters.forall(f => IceliteTable.filterColumn(f).isDefined)
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
-    val cond = filters.flatMap(IceliteScanBuilder.toColumn)
+    val cond = filters.flatMap(IceliteTable.filterColumn)
       .reduceOption(_ && _)
       .getOrElse(org.apache.spark.sql.functions.lit(true)) // unqualified DELETE
     table.deleteWhere(cond)
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new IceliteScanBuilder(() => table.read(), table.schema)
+    new IceliteScanBuilder(filters => table.scan(filters), table.schema)
 
   /** `INSERT INTO` appends; `INSERT OVERWRITE` (the whole-table
     * replace Spark plans as OverwriteByExpression(true)) lands as ONE
@@ -682,7 +682,7 @@ final class IceliteSparkTable(table: IceliteTable) extends Table
       * [[IceliteTable.withSortedWrite]]: the batch range-partitions +
       * sorts on (partition cols, sort cols) — the compaction layout
       * at write time, files own DISJOINT sort-key ranges and
-      * `readStatRange` prunes steady-state SQL appends immediately
+      * `planFiles` prunes steady-state SQL appends immediately
       * (the Iceberg `write.sort-order` behavior).
       */
     private def declaredSortCols: Seq[String] = table.sortOrder
@@ -697,7 +697,7 @@ final class IceliteSparkTable(table: IceliteTable) extends Table
               scala.util.Try(staticTouched(partFilters)).toOption match {
                 case Some(touched) => table.overwritePartitions(data, Some(touched))
                 case None =>
-                  val conds = partFilters.flatMap(IceliteScanBuilder.toColumn)
+                  val conds = partFilters.flatMap(IceliteTable.filterColumn)
                   if (conds.length != partFilters.length)
                     throw new UnsupportedOperationException(
                       s"INSERT OVERWRITE by filter on ${table.name}: filter not " +
@@ -765,24 +765,26 @@ object IceliteSparkTable {
     override def capabilities(): util.Set[TableCapability] =
       util.EnumSet.of(TableCapability.BATCH_READ)
     override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-      new IceliteScanBuilder(df, schema)
+      new IceliteScanBuilder(
+        _.flatMap(IceliteTable.filterColumn).foldLeft(df())(_ filter _), schema)
   }
 }
 
 /** Filter + column pushdown folded into the MoR DataFrame before it
-  * compiles — the predicates reach the parquet scans underneath the
-  * delete-merge joins, so file/page pruning behaves identically to the
-  * programmatic read path. Unsupported filter shapes are returned as
-  * residuals for Spark to evaluate above the scan.
+  * compiles: `mkDf` receives the pushed filters — for a table,
+  * [[IceliteTable.scan]], which plans files from them and bounds the
+  * data rows beneath the delete merge, the programmatic read path.
+  * Unsupported filter shapes are returned as residuals for Spark to
+  * evaluate above the scan.
   */
-final class IceliteScanBuilder(mkDf: () => DataFrame, tableSchema: StructType)
+final class IceliteScanBuilder(mkDf: Seq[Filter] => DataFrame, tableSchema: StructType)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = tableSchema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, residual) = filters.partition(f => IceliteScanBuilder.toColumn(f).isDefined)
+    val (ok, residual) = filters.partition(f => IceliteTable.filterColumn(f).isDefined)
     pushed = ok
     residual
   }
@@ -812,39 +814,11 @@ final class IceliteScanBuilder(mkDf: () => DataFrame, tableSchema: StructType)
           override def sqlContext: SQLContext = context
           override def schema: StructType = outSchema
           override def needConversion: Boolean = false
-          override def buildScan(): RDD[Row] = {
-            var df = mkDf()
-            filters.flatMap(IceliteScanBuilder.toColumn).foreach(c => df = df.filter(c))
-            df = df.select(outSchema.fieldNames.toIndexedSeq.map(col): _*)
-            df.queryExecution.toRdd.asInstanceOf[RDD[Row]]
-          }
+          override def buildScan(): RDD[Row] =
+            mkDf(filters.toSeq).select(outSchema.fieldNames.toIndexedSeq.map(col): _*)
+              .queryExecution.toRdd.asInstanceOf[RDD[Row]]
         }.asInstanceOf[T]
       }
     }
-  }
-}
-
-object IceliteScanBuilder {
-
-  /** Translate a v1 source [[Filter]] to a [[org.apache.spark.sql.Column]];
-    * None = shape we don't fold (Spark keeps it as a residual).
-    */
-  def toColumn(f: Filter): Option[org.apache.spark.sql.Column] = f match {
-    case sources.EqualTo(a, v) => Some(col(a) === v)
-    case sources.EqualNullSafe(a, v) => Some(col(a) <=> v)
-    case sources.GreaterThan(a, v) => Some(col(a) > v)
-    case sources.GreaterThanOrEqual(a, v) => Some(col(a) >= v)
-    case sources.LessThan(a, v) => Some(col(a) < v)
-    case sources.LessThanOrEqual(a, v) => Some(col(a) <= v)
-    case sources.In(a, vs) => Some(col(a).isInCollection(vs.toSeq))
-    case sources.IsNull(a) => Some(col(a).isNull)
-    case sources.IsNotNull(a) => Some(col(a).isNotNull)
-    case sources.StringStartsWith(a, v) => Some(col(a).startsWith(v))
-    case sources.StringEndsWith(a, v) => Some(col(a).endsWith(v))
-    case sources.StringContains(a, v) => Some(col(a).contains(v))
-    case sources.Not(c) => toColumn(c).map(!_)
-    case sources.And(l, r) => for (a <- toColumn(l); b <- toColumn(r)) yield a && b
-    case sources.Or(l, r) => for (a <- toColumn(l); b <- toColumn(r)) yield a || b
-    case _ => None
   }
 }

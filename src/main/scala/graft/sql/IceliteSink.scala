@@ -63,13 +63,11 @@ final class IceliteSinkProvider extends StreamSinkProvider with DataSourceRegist
       override def schema = table.schema
       override def needConversion: Boolean = false
       override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
-        filters.filter(f => IceliteScanBuilder.toColumn(f).isEmpty)
-      override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
-        var df = table.read()
-        filters.flatMap(IceliteScanBuilder.toColumn).foreach(c => df = df.filter(c))
-        df = df.select(requiredColumns.toIndexedSeq.map(org.apache.spark.sql.functions.col): _*)
-        df.queryExecution.toRdd.asInstanceOf[RDD[Row]]
-      }
+        filters.filter(f => IceliteTable.filterColumn(f).isEmpty)
+      override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] =
+        table.scan(filters.toSeq.filter(f => IceliteTable.filterColumn(f).isDefined))
+          .select(requiredColumns.toIndexedSeq.map(org.apache.spark.sql.functions.col): _*)
+          .queryExecution.toRdd.asInstanceOf[RDD[Row]]
     }
   }
 

@@ -68,36 +68,8 @@ final class CheckpointStore(spark: SparkSession, warehouse: String) {
         .filter(org.apache.spark.sql.functions.col("sync_id") === syncId)
         .collect().headOption.map(fromRow)
       committed.foreach(lastWritten.update(syncId, _))
-      committed.orElse(migrateFromLegacy(syncId))
+      committed
     }
-
-  /** A sync created before the per-sync-table split has its checkpoint
-    * row in the legacy SHARED `_sync._sync_checkpoints` table; without
-    * this fallback a resumed-across-the-change sync would see no
-    * checkpoint, truncate its target, and re-run the full initial sync.
-    * The row is copied forward into the per-sync table once (via
-    * [[write]]), after which the legacy row is never consulted again
-    * for this sync.
-    */
-  private def migrateFromLegacy(syncId: String): Option[CheckpointRecord] = {
-    val legacy = legacyTable().flatMap { t =>
-      t.refresh()
-      t.read()
-        .filter(org.apache.spark.sql.functions.col("sync_id") === syncId)
-        .collect().headOption.map(fromRow)
-    }
-    legacy.foreach(write) // one-time migrate into the per-sync table
-    legacy
-  }
-
-  private def legacyTable(): Option[IceliteTable] = {
-    val metaPath = new org.apache.hadoop.fs.Path(
-      s"$warehouse/$Namespace/$LegacyTableName/metadata")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(metaPath))
-      Some(IceliteTable.load(spark, warehouse, Namespace, LegacyTableName))
-    else None
-  }
 
   /** Checkpoint writes are one row and crash-ordering-critical, so they
     * bypass Spark entirely: the data and delete-key parquet files are
@@ -212,21 +184,9 @@ final class CheckpointStore(spark: SparkSession, warehouse: String) {
         .getOrElse(IceliteTable.load(spark, warehouse, Namespace, n))
       t.refresh(); t.read()
     }
-    val perSync = reads.reduceOption(_ unionByName _)
+    reads.reduceOption(_ unionByName _)
       .getOrElse(spark.createDataFrame(
         java.util.List.of[Row](), Schema))
-    // legacy shared-table rows for syncs not yet migrated (anti join on
-    // sync_id: a migrated sync's per-sync row supersedes its legacy row)
-    legacyTable() match {
-      case Some(t) =>
-        t.refresh()
-        val col = org.apache.spark.sql.functions.col _
-        val legacyRows = t.read().join(
-          perSync.select(col("sync_id").as("_migrated_id")),
-          col("sync_id") === col("_migrated_id"), "left_anti")
-        perSync.unionByName(legacyRows)
-      case None => perSync
-    }
   }
 }
 
@@ -237,11 +197,6 @@ object CheckpointStore {
 
   /** Per-sync checkpoint table name prefix. */
   val TablePrefix = "_sync_checkpoints__"
-
-  /** Pre-split shared checkpoint table (read-only fallback + one-time
-    * migration source; never written anymore).
-    */
-  val LegacyTableName = "_sync_checkpoints"
 
   /** `_sync._sync_checkpoints__<syncId>` with the sync id (already
     * `namespace.table`) sanitized to a filesystem-safe table name. A

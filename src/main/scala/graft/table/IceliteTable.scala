@@ -6,6 +6,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
 import graft.config.PartitionConfig
@@ -157,8 +159,7 @@ final class IceliteTable private (
         .collect()
         .map(r => new Path(r.getString(0)).getName -> ((r.get(1), r.getLong(2))))
         .toMap
-      val statKeys = keyStatColumns(tableKeyColumns(head0.properties), head0.schema)
-      val statCols = statKeys.toMap ++ trackedStats(head0.properties, head0.schema)
+      val statCols = recordedStatColumns(head0)
       var cum = 0L
       listed.zipWithIndex.foreach { case ((stagedRel, bytes), k) =>
         val t0 = System.currentTimeMillis()
@@ -229,13 +230,10 @@ final class IceliteTable private (
     val withLineage = numbered
       .withColumn(RowIdCol, col(rn) + lit(base - 1)).drop(rn)
       .withColumn(LastUpdatedSeqCol, lit(seq))
-    val statKeys = keyStatColumns(tableKeyColumns(head.properties), head.schema)
     val (dataFiles, count, fileStats, dataMetrics) = writeDataFiles(
       enforceChecks(conformToSchema(withLineage, head.schema), head.schema, head.properties)
         .withColumn(SeqCol, lit(seq)),
-      commitId, head.partitioning, nFiles = None,
-      sortBy = writeSortBy(head.properties),
-      extraStatCols = statKeys.toMap ++ trackedStats(head.properties, head.schema))
+      commitId, head, nFiles = None, sortBy = writeSortBy(head.properties))
     (head.copy(properties = head.properties + (NextRowIdProp -> (base + count).toString))
       .withSnapshot(Snapshot(seq, System.currentTimeMillis(), "append",
         dataFiles, Nil, count, fileStats, fileMetrics = dataMetrics)), seq)
@@ -537,10 +535,8 @@ final class IceliteTable private (
     keyCols.foreach(k => require(srcSet.contains(k), s"source lacks key column '$k'"))
     // BY SOURCE must classify every target row (an unmatched row can
     // live in any file) — the scan is unprunable by construction; the
-    // plain merge keeps the key-range-pruned scan
-    val targetScan =
-      if (bySource) read().select(tableSchema.fieldNames.map(col).toSeq: _*)
-      else readForKeyRange(source, keyCols)
+    // plain merge scans only the source's key range
+    val targetScan = scan(if (bySource) Nil else keyRangeFilters(source, keyCols))
     val joined = source.withColumn(sMarker, lit(true)).alias("s").join(
       targetScan.withColumn(marker, lit(true)).alias("t"),
       keyCols.map(k => col(s"s.$k") === col(s"t.$k")).reduce(_ && _),
@@ -816,20 +812,20 @@ final class IceliteTable private (
     if (operation != "delete") requireLineageSafe(head, operation)
     val seq = head.lastSeq + 1
     val commitId = UUID.randomUUID().toString
-    // per-file key-column min/max (this commit's keys, or the table's
-    // recorded key columns for keyless appends): the manifest stat that
-    // lets readChanges / merge prune history files by key range instead
-    // of scanning the whole table
-    val statKeys = keyStatColumns(
-      if (keyCols.nonEmpty) keyCols else tableKeyColumns(head.properties), head.schema)
+    // remember the delete-key columns in table properties so the key
+    // schema survives compaction folding every delete file away — and
+    // so this commit's data files already record key-column stats, the
+    // manifest stat that lets reads prune history files by key range
+    val withKeyProp =
+      if (keyCols.nonEmpty && !head.properties.contains(DeleteKeyColumnsProp))
+        head.copy(properties = head.properties + (DeleteKeyColumnsProp -> keyCols.mkString(",")))
+      else head
     val (dataFiles, count, fileStats, dataMetrics) =
       if (df != null)
         writeDataFiles(
           enforceChecks(conformToSchema(df, head.schema), head.schema, head.properties)
             .withColumn(SeqCol, lit(seq)),
-          commitId, head.partitioning, nFiles = None,
-          sortBy = writeSortBy(head.properties),
-          extraStatCols = statKeys.toMap ++ trackedStats(head.properties, head.schema))
+          commitId, withKeyProp, nFiles = None, sortBy = writeSortBy(head.properties))
       else (Seq.empty[String], 0L, Map.empty[String, Map[String, (String, String)]],
         Map.empty[String, (Long, Long)])
     val (deleteFiles, deleteStats, deleteMetrics) = deleteKeys match {
@@ -840,7 +836,7 @@ final class IceliteTable private (
         graft.util.Phase.timed("delete.job")(fastWrite(keysW).parquet(out))
         val listed = graft.util.Phase.timed("delete.list")(listParquetInfos(out))
         val infos = graft.util.Phase.timed("delete.footers")(listed.map { case (f, bytes) =>
-          val (rows, stats) = footerInfo(f, statKeys.toMap)
+          val (rows, stats) = footerInfo(f, keyStatColumns(keyCols, head.schema).toMap)
           (f, rows, bytes, stats)
         })
         (listed.map(_._1),
@@ -849,12 +845,6 @@ final class IceliteTable private (
       case None => (Nil, Map.empty[String, Map[String, (String, String)]],
         Map.empty[String, (Long, Long)])
     }
-    // remember the delete-key columns in table properties so the key
-    // schema survives compaction folding every delete file away
-    val withKeyProp =
-      if (keyCols.nonEmpty && !head.properties.contains(DeleteKeyColumnsProp))
-        head.copy(properties = head.properties + (DeleteKeyColumnsProp -> keyCols.mkString(",")))
-      else head
     (withKeyProp.withSnapshot(Snapshot(seq, System.currentTimeMillis(), operation,
       dataFiles, deleteFiles, count, fileStats ++ deleteStats, summary = summary(count),
       fileMetrics = dataMetrics ++ deleteMetrics)), seq)
@@ -869,9 +859,24 @@ final class IceliteTable private (
     * one conditional anti-join — deletes are assumed small relative to
     * data; past the byte guard they are first folded to one row per
     * key ([[applyDeletes]]). Compaction folds them in and resets this
-    * cost.
+    * cost. The unfiltered [[scan]].
     */
-  def read(): DataFrame = readSnapshots(cachedMeta.snapshots)
+  def read(): DataFrame = scan(Nil)
+
+  /** The one Merge-on-Read scan: the current table state restricted to
+    * the rows matching `filters` (ANDed; the DSv2 pushdown vocabulary,
+    * each translatable by [[IceliteTable.filterColumn]]). [[planFiles]]
+    * keeps the read to the files that can match; the filters then bound
+    * the data rows before position deletes, DVs and equality deletes
+    * merge. A filter may name a derived partition column of the current
+    * or a retired spec: it is recomputed from its base column, exact for
+    * files of every spec generation. [[read]], [[readAt]], the SQL scan
+    * and [[merge]]'s target scan all run this body.
+    */
+  def scan(filters: Seq[Filter]): DataFrame = {
+    val m = cachedMeta
+    scanAs(m.snapshots, m.schema, Long.MaxValue, filters)
+  }
 
   /** Time travel (Iceberg snapshot read): table state as of commit
     * `asOfSeq`. History reaches back to the last rewrite snapshot
@@ -922,8 +927,7 @@ final class IceliteTable private (
             s"snapshot $asOfSeq of $name is not reconstructible — the in-place " +
               s"file rewrite at seq $ow pruned prior snapshots' files")
       }
-    readSnapshotsAs(m.snapshots.filter(_.seq <= asOfSeq),
-      schemaAt(asOfSeq), asOfSeq)
+    scanAs(m.snapshots.filter(_.seq <= asOfSeq), schemaAt(asOfSeq), asOfSeq, Nil)
   }
 
   /** Incremental consumption: the row VERSIONS appended after
@@ -944,7 +948,7 @@ final class IceliteTable private (
     // NEWER pos-delete commits make the feed unservable
     requireNoPosDeletes(m, "incremental feed", afterSeq = sinceSeq)
     val snaps = m.snapshots.filter(_.seq > sinceSeq)
-    readFiles(snaps.flatMap(_.dataFiles), withSeq = true)
+    readFiles(snaps.flatMap(_.dataFiles))
   }
 
   /** The incremental feed and changelog are KEY-event protocols, and a
@@ -1063,7 +1067,7 @@ final class IceliteTable private (
     if (inRange.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
 
-    val addedInRange = readFiles(inRange.flatMap(_.dataFiles), withSeq = true)
+    val addedInRange = readFiles(inRange.flatMap(_.dataFiles))
     val delFilesInRange = inRange.flatMap(_.deleteFiles)
     if (delFilesInRange.isEmpty && posInRange.isEmpty)
       return emit(addedInRange, lit("insert"), col(SeqCol))
@@ -1112,11 +1116,8 @@ final class IceliteTable private (
       case None => delInRange.select(keyCols.map(col): _*)
     }
     val affected = affectedKeySrc.distinct()
-    val hist = m.snapshots.filter(_.seq <= toSeq)
-    val bounds = keyRangeBounds(affectedKeySrc, keyStatColumns(keyCols, m.schema))
     val (histDataFiles, histDelFiles) =
-      (pruneConjunctive(hist, _.dataFiles, bounds),
-        pruneConjunctive(hist, _.deleteFiles, bounds))
+      planFiles(m.snapshots.filter(_.seq <= toSeq), keyRangeFilters(affectedKeySrc, keyCols))
     val delAll = if (histDelFiles.isEmpty) emptyKeyed
       else readEqDeletes(histDelFiles)
 
@@ -1127,7 +1128,7 @@ final class IceliteTable private (
     // event log for affected keys: kind 0 = delete, 1 = data; at equal
     // seq the delete sorts first (upsert semantics: own-seq data survives)
     val payload = struct(payloadCols.map(col): _*)
-    val dataHist = readFiles(histDataFiles, withSeq = true)
+    val dataHist = readFiles(histDataFiles)
       .join(affected, keyCols, "left_semi")
     val dEv = dataHist.select(
       keyCols.map(col) ++ Seq(col(SeqCol).as("_ev_seq"), lit(1).as("_ev_kind"), payload.as("_ev_p")): _*)
@@ -1334,28 +1335,35 @@ final class IceliteTable private (
     applyPosDeletes(applyDv(data, dvs), coords)
   }
 
-  private def readSnapshots(snaps: Seq[Snapshot]): DataFrame =
-    readSnapshotsAs(snaps, cachedMeta.schema, Long.MaxValue)
-
-  /** MoR view under an explicit target schema valid at `asOf` — the
-    * shared body of [[read]] (current schema) and [[readAt]] (the
-    * schema as of the travel seq, including later-renamed columns
-    * under their then-current names and later-dropped columns).
+  /** [[scan]] under an explicit target schema valid at `asOf` — the
+    * current schema, or for [[readAt]] the schema as of the travel seq
+    * (later-renamed columns under their then-current names,
+    * later-dropped columns present).
     */
-  private def readSnapshotsAs(
-      snaps: Seq[Snapshot], target: StructType, asOf: Long): DataFrame = {
+  private def scanAs(snaps: Seq[Snapshot], target: StructType, asOf: Long,
+      filters: Seq[Filter]): DataFrame = {
+    val m = cachedMeta
+    val (dataFiles, deleteFiles) = planFiles(snaps, filters)
+    val conds = filters.map(f => IceliteTable.filterColumn(f).getOrElse(
+      throw new IllegalArgumentException(s"scan of $name: filter $f has no column form")))
+    val derived = (m.partitioning ++ parseRetired(m.properties))
+      .filter(p => filters.exists(_.references.contains(partColName(p))))
+    requireSessionTz(derived)
     // pos coordinates ride the scan only when a pos delete or DV is in
-    // scope — the common (no-pos-delete) plan is unchanged
-    val data = readFilesAs(snaps.flatMap(_.dataFiles), target, asOf,
-      withPos = needPosCols(snaps))
-    applyDeletes(applyPosState(data, snaps), eqDeleteState(snaps))
+    // scope — the common (no-pos-delete) plan is unchanged; stored
+    // derived columns are projected away, so filtered ones are recomputed
+    val data = derived.foldLeft(readFilesAs(dataFiles, target, asOf,
+      withPos = needPosCols(snaps)))((d, p) => d.withColumn(partColName(p), transformColumn(p)._2))
+    val eqLive = eqDeleteState(snaps).toSet
+    applyDeletes(applyPosState(conds.foldLeft(data)(_ filter _), snaps),
+      deleteFiles.filter(eqLive))
       .select(target.fieldNames.map(col).toSeq: _*)
   }
 
   /** Read including the hidden seq + derived partition columns (for
     * tests, compaction and incremental consumers).
     */
-  def readRaw(): DataFrame = readFiles(cachedMeta.liveDataFiles, withSeq = true)
+  def readRaw(): DataFrame = readFiles(cachedMeta.liveDataFiles)
 
   // ------------------------------------------- metadata tables (Iceberg
   // exposes `table.history` / `table.files`; same introspection here)
@@ -1710,7 +1718,7 @@ final class IceliteTable private (
       return analyze(cols, k)
     val newFiles = newSnaps.flatMap(_.dataFiles)
     if (newFiles.isEmpty) return last.seq
-    val delta = readFiles(newFiles, withSeq = false)
+    val delta = readFiles(newFiles)
     val (dn, per) = statsAggregate(delta, m.schema, cols, k)
     // a published histogram folds too: its bounds are FROZEN, so the
     // delta's clamped bucket counts simply add (one extra delta-only
@@ -1787,7 +1795,7 @@ final class IceliteTable private (
     }.toDF("file", "content", "seq", "operation", "partition_stats")
   }
 
-  private def readFiles(files: Seq[String], withSeq: Boolean): DataFrame =
+  private def readFiles(files: Seq[String]): DataFrame =
     readFilesAs(files, cachedMeta.schema, Long.MaxValue)
 
   /** Read data files under `target` (names valid at `asOf`),
@@ -2016,12 +2024,9 @@ final class IceliteTable private (
         val commitId = UUID.randomUUID().toString
         val (files, count, stats, metrics) = writeDataFiles(
           conformToSchema(current, head.schema).withColumn(SeqCol, lit(seq)),
-          commitId, head.partitioning, Some(nFiles),
+          commitId, head, Some(nFiles),
           zorder = zRanges,
-          sortBy = if (zorderBy.isEmpty) sortOrderColumns(head.properties) else Nil,
-          extraStatCols = zorderBy.map(_ -> true).toMap ++
-            keyStatColumns(tableKeyColumns(head.properties), head.schema).toMap ++
-            trackedStats(head.properties, head.schema))
+          sortBy = if (zorderBy.isEmpty) sortOrderColumns(head.properties) else Nil)
         val withZ =
           if (zorderBy.isEmpty) head
           else head.copy(properties =
@@ -2121,10 +2126,7 @@ final class IceliteTable private (
       // files are written ONCE; only the metadata swap runs in the
       // optimistic-retry loop
       val (files, _, stats, metrics) =
-        if (count > 0) writeDataFiles(survivors, commitId, before.partitioning, Some(nFiles),
-          extraStatCols =
-            keyStatColumns(tableKeyColumns(before.properties), before.schema).toMap ++
-              trackedStats(before.properties, before.schema))
+        if (count > 0) writeDataFiles(survivors, commitId, before, Some(nFiles))
         else (Nil, 0L, Map.empty[String, Map[String, (String, String)]],
           Map.empty[String, (Long, Long)])
       retryCommit { head =>
@@ -2391,13 +2393,10 @@ final class IceliteTable private (
           coords.write.mode("errorifexists").parquet(out)
           listParquet(out)
         }
-        val statKeys = keyStatColumns(tableKeyColumns(head.properties), head.schema)
         val (files, count, stats, metrics) = writeDataFiles(
           enforceChecks(conformToSchema(df, head.schema), head.schema, head.properties)
             .withColumn(SeqCol, lit(seq)),
-          commitId, head.partitioning, nFiles = None,
-          sortBy = writeSortBy(head.properties),
-          extraStatCols = statKeys.toMap ++ trackedStats(head.properties, head.schema))
+          commitId, head, nFiles = None, sortBy = writeSortBy(head.properties))
         (head.withSnapshot(Snapshot(seq, System.currentTimeMillis(), "overwrite-where",
           files, Nil, count, stats, posDeleteFiles = posFiles,
           fileMetrics = metrics)), seq)
@@ -2414,10 +2413,7 @@ final class IceliteTable private (
       val (files, count, stats, metrics) = writeDataFiles(
         enforceChecks(conformToSchema(df, head.schema), head.schema, head.properties)
           .withColumn(SeqCol, lit(seq)),
-        commitId, head.partitioning, nFiles = None,
-        sortBy = writeSortBy(head.properties),
-        extraStatCols = keyStatColumns(tableKeyColumns(head.properties), head.schema).toMap ++
-          trackedStats(head.properties, head.schema))
+        commitId, head, nFiles = None, sortBy = writeSortBy(head.properties))
       (head.rewritten(Snapshot(seq, System.currentTimeMillis(), "rewrite-overwrite",
         files, Nil, count, stats,
         summary = carrySyncProgress(head.snapshots),
@@ -2507,8 +2503,6 @@ final class IceliteTable private (
 
     val seq = before.lastSeq + 1
     val commitId = UUID.randomUUID().toString
-    val statCols = keyStatColumns(tableKeyColumns(before.properties), before.schema).toMap ++
-      trackedStats(before.properties, before.schema)
     // surviving rows of mixed files (original seqs preserved)
     val (survFiles, survCount, survStats, survMetrics) =
       if (mixedFiles.isEmpty)
@@ -2518,12 +2512,12 @@ final class IceliteTable private (
         val (_, tc) = transformColumn(p)
         val surv = readFilesAs(mixedFiles, before.schema, Long.MaxValue, meta = before)
           .filter(!tc.cast("string").isin(touched.toSeq: _*) || tc.isNull)
-        writeDataFiles(surv, s"$commitId-surv", parts, None, extraStatCols = statCols)
+        writeDataFiles(surv, s"$commitId-surv", before, None)
       }
     // the batch itself, stamped with the commit seq
     val (newFiles, newCount, newStats, newMetrics) = writeDataFiles(
       conformToSchema(df, before.schema).withColumn(SeqCol, lit(seq)),
-      commitId, parts, nFiles = None, extraStatCols = statCols)
+      commitId, before, nFiles = None)
 
     retryCommit { head =>
       if (head.snapshots.map(_.seq) != beforeSeqs)
@@ -2707,7 +2701,6 @@ final class IceliteTable private (
         matching.select(col(PosFileCol), col(PosCol)).withColumn(SeqCol, lit(seq))
           .write.mode("errorifexists").parquet(out)
         // mutated images → data file (stamped with this commit's seq)
-        val statKeys = keyStatColumns(tableKeyColumns(head.properties), head.schema)
         // one simultaneous projection: every set-expression sees the
         // PRE-update row (SQL UPDATE semantics), never a half-applied one
         val updated = matching.select(head.schema.fieldNames.toSeq.map(n =>
@@ -2715,8 +2708,7 @@ final class IceliteTable private (
         val (files, count, stats, metrics) = writeDataFiles(
           enforceChecks(conformToSchema(updated, head.schema), head.schema, head.properties)
             .withColumn(SeqCol, lit(seq)),
-          commitId, head.partitioning, nFiles = None,
-          extraStatCols = statKeys.toMap ++ trackedStats(head.properties, head.schema))
+          commitId, head, nFiles = None)
         (head.withSnapshot(Snapshot(seq, System.currentTimeMillis(), "update",
           files, Nil, count, stats, posDeleteFiles = listParquet(out),
           fileMetrics = metrics)), seq)
@@ -2775,9 +2767,10 @@ final class IceliteTable private (
       case Some((c, lo, hi)) =>
         require(IceliteTable.statColumns(before.properties).exists(_.equalsIgnoreCase(c)),
           s"'$c' is not a declared stat column of $name (trackStats first)")
-        val Seq((canonical, numeric)) = keyStatColumns(Seq(c), before.schema)
-        pruneByKeyStats(before.snapshots, _.dataFiles, canonical,
-          Option(lo).map(String.valueOf), Option(hi).map(String.valueOf), numeric)
+        val Seq((canonical, _)) = keyStatColumns(Seq(c), before.schema)
+        planFiles(before.snapshots,
+          Option(lo).map(sources.GreaterThanOrEqual(canonical, _)).toSeq ++
+            Option(hi).map(sources.LessThanOrEqual(canonical, _)))._1
       case None => before.snapshots.flatMap(_.dataFiles)
     }
     if (touched.isEmpty) return before.lastSeq
@@ -2798,11 +2791,9 @@ final class IceliteTable private (
     val rewritten = visible.select(before.schema.fieldNames.toSeq.map(n =>
       setL.get(n).map(e => when(condition, e).otherwise(col(n)).as(n)).getOrElse(col(n))) :+
       when(condition, lit(seq)).otherwise(col(SeqCol)).as(SeqCol): _*)
-    val statCols = keyStatColumns(tableKeyColumns(before.properties), before.schema).toMap ++
-      trackedStats(before.properties, before.schema)
     val (files, count, stats, metrics) = writeDataFiles(
-      enforceChecks(rewritten, before.schema, before.properties), commitId, before.partitioning,
-      nFiles = None, extraStatCols = statCols)
+      enforceChecks(rewritten, before.schema, before.properties), commitId, before,
+      nFiles = None)
     retryCommit { head =>
       if (head.snapshots.map(_.seq) != beforeSeqs)
         throw new IllegalStateException(
@@ -2849,13 +2840,10 @@ final class IceliteTable private (
     val head = cachedMeta
     val stageId = s"stage-${UUID.randomUUID()}"
     val seq = atSeq.getOrElse(head.lastSeq + 1)
-    val statKeys = keyStatColumns(tableKeyColumns(head.properties), head.schema)
     val (files, count, stats, metrics) = writeDataFiles(
       enforceChecks(conformToSchema(df, head.schema), head.schema, head.properties)
         .withColumn(SeqCol, lit(seq)),
-      stageId, head.partitioning, nFiles = None,
-      sortBy = writeSortBy(head.properties),
-      extraStatCols = statKeys.toMap ++ trackedStats(head.properties, head.schema))
+      stageId, head, nFiles = None, sortBy = writeSortBy(head.properties))
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = m.createObjectNode()
     root.put("expectedSeq", seq); root.put("recordCount", count)
@@ -3205,7 +3193,7 @@ final class IceliteTable private (
     * counts: building the stat table is O(files) driver work and the
     * value×file overlap test runs distributed — at thousands of
     * partitions × tens of thousands of files a per-value
-    * [[pruneDataFiles]] loop would be quadratic ON THE DRIVER, the
+    * [[planFiles]] loop would be quadratic ON THE DRIVER, the
     * thing a 1000-executor cluster can't parallelize away.
     */
   def partitionsTable(): DataFrame = {
@@ -3240,7 +3228,7 @@ final class IceliteTable private (
     }
     val files = spark.createDataFrame(
       java.util.Arrays.asList(statRows: _*), statSchema)
-    // per column, the same conservative test as pruneByKeyStats/cmpStat:
+    // per column, the same conservative test as planFiles/cmpStat:
     // no value bound, missing stats, or (numeric) an unparseable side
     // all KEEP the file; string compare is UTF-8 byte order, which is
     // exactly Spark's UTF8String ordering. Identity transforms over
@@ -4101,19 +4089,6 @@ final class IceliteTable private (
     } finally reader.close()
   }
 
-  private def pruneComparatorFor(partCol: String): Boolean =
-    prunableColumns(cachedMeta.partitioning ++ retiredPartitioning, cachedMeta.schema)
-      .get(partCol)
-      .orElse( // z-order columns are validated integral → numeric compare
-        if (zorderColumns(cachedMeta.properties).contains(partCol)) Some(true) else None)
-      .orElse( // declared stat columns carry their schema-type comparator
-        if (IceliteTable.statColumns(cachedMeta.properties).exists(_.equalsIgnoreCase(partCol)))
-          keyStatColumns(Seq(partCol), cachedMeta.schema).headOption.map(_._2)
-        else None)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$partCol is not a prunable partition column (its transform or base " +
-          "type has no sound stat ordering — filter on the base column instead)"))
-
   /** Key columns usable for footer-stat range pruning, mapped to
     * whether their stat comparator is numeric: integral types compare
     * numerically, strings in UTF-8 BYTE order (matching both the
@@ -4153,196 +4128,123 @@ final class IceliteTable private (
   private[table] def tableKeyColumns(props: Map[String, String]): Seq[String] =
     props.get(DeleteKeyColumnsProp).toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
 
-  /** Files (selected by `pick` from each snapshot) whose recorded
-    * [statCol] min/max may intersect [lo, hi] (either bound optional)
-    * under the column's comparator — the ONE overlap predicate behind
-    * key-range, z-order and partition-range pruning. CONSERVATIVE by
-    * construction: files with no recorded stat for the column are
-    * always kept (never prune on missing information), and `cmpStat`
-    * treats unparseable numeric operands as equal-to-everything, which
-    * also keeps the file.
+  /** Columns whose per-file min/max every data-file write records — and
+    * so the only columns [[planFiles]] reads evidence for — mapped to
+    * whether their stat comparator is numeric: the prunable partition
+    * transforms, the recorded equality-delete key columns, the declared
+    * stat columns ([[trackStats]]) and the z-order columns of the last
+    * z rewrite.
     */
-  private[table] def pruneByKeyStats(
-      snaps: Seq[Snapshot],
-      pick: Snapshot => Seq[String],
-      statCol: String,
-      lo: Option[String],
-      hi: Option[String],
-      numeric: Boolean): Seq[String] =
-    snaps.flatMap { s =>
-      pick(s).filter { f =>
-        s.fileStats.get(f).flatMap(_.get(statCol)) match {
-          case Some((mn, mx)) =>
-            lo.forall(l => IceliteTable.cmpStat(mx, l, numeric) >= 0) &&
-              hi.forall(h => IceliteTable.cmpStat(mn, h, numeric) <= 0)
-          case None => true
+  private def recordedStatColumns(m: TableMeta): Map[String, Boolean] =
+    prunableColumns(m.partitioning, m.schema) ++ keyStatColumns(
+      tableKeyColumns(m.properties) ++ IceliteTable.statColumns(m.properties) ++
+        zorderColumns(m.properties), m.schema)
+
+  /** Scan planning from snapshot metadata alone (Iceberg's `planFiles`):
+    * the data and equality-delete files of `snaps` a read under
+    * `filters` (ANDed; the DSv2 pushdown vocabulary) must touch.
+    * Evidence comes from `EqualTo`, `In`, `<`, `<=`, `>` and `>=` on
+    * literals under `And`; any other shape prunes nothing. A data file
+    * is dropped only when its recorded min/max on a filtered column
+    * ([[recordedStatColumns]], plus retired partition transforms)
+    * cannot hold a match, or when the bloom of the table's bloom column
+    * ([[buildKeyBlooms]]) holds none of the probed keys; a file without
+    * the evidence is kept. Equality-delete files prune only by bounds on
+    * the key columns — sound because [[scan]] applies the filters to the
+    * data rows BEFORE the delete merge, so a delete outside the bound
+    * removes no returned row. Position-delete and DV files are never
+    * pruned. Runs no Spark job unless a bloom is probed.
+    */
+  def planFiles(snaps: Seq[Snapshot], filters: Seq[Filter]): (Seq[String], Seq[String]) = {
+    planCalls.incrementAndGet()
+    val m = cachedMeta
+    val cmp = recordedStatColumns(m) ++ prunableColumns(parseRetired(m.properties), m.schema)
+    // a literal renders as its stats do: integral under a numeric
+    // comparator, a string under the byte-order one; anything else is
+    // no evidence
+    def render(c: String, v: Any): Option[String] = (cmp.get(c), v) match {
+      case (Some(true), n @ (_: java.lang.Long | _: java.lang.Integer |
+          _: java.lang.Short | _: java.lang.Byte)) => Some(n.toString)
+      case (Some(false), s: String) => Some(s)
+      case _ => None
+    }
+    def bounds(f: Filter): Seq[(String, Option[String], Option[String])] = f match {
+      case sources.And(l, r) => bounds(l) ++ bounds(r)
+      case sources.EqualTo(c, v) => render(c, v).map(s => (c, Some(s), Some(s))).toSeq
+      case sources.In(c, vs) if vs.nonEmpty =>
+        val rs = vs.toSeq.map(render(c, _))
+        if (rs.exists(_.isEmpty)) Nil
+        else {
+          val ord = Ordering.fromLessThan[String](IceliteTable.cmpStat(_, _, cmp(c)) < 0)
+          Seq((c, Some(rs.flatten.min(ord)), Some(rs.flatten.max(ord))))
+        }
+      case sources.LessThan(c, v) => render(c, v).map(s => (c, None, Some(s))).toSeq
+      case sources.LessThanOrEqual(c, v) => render(c, v).map(s => (c, None, Some(s))).toSeq
+      case sources.GreaterThan(c, v) => render(c, v).map(s => (c, Some(s), None)).toSeq
+      case sources.GreaterThanOrEqual(c, v) => render(c, v).map(s => (c, Some(s), None)).toSeq
+      case _ => Nil
+    }
+    val evolved = schemaOps(m.properties).nonEmpty
+    // a file's stats sit under the name the column had when its
+    // snapshot was written; a column born after the file has none
+    def keep(s: Snapshot, files: Seq[String],
+        bs: Seq[(String, Option[String], Option[String])]): Seq[String] = {
+      val stored = bs.map { case (c, _, _) =>
+        if (evolved) topAtFileSeq(c, Long.MaxValue, s.seq)._1 else Some(c) }
+      files.filter { f =>
+        val stats = s.fileStats.getOrElse(f, Map.empty)
+        bs.zip(stored).forall { case ((c, lo, hi), name) =>
+          name.flatMap(stats.get).forall { case (mn, mx) =>
+            lo.forall(IceliteTable.cmpStat(mx, _, cmp(c)) >= 0) &&
+              hi.forall(IceliteTable.cmpStat(mn, _, cmp(c)) <= 0)
+          }
         }
       }
     }
-
-  /** Per-column [min, max] of `df` over the given stat columns — ONE
-    * agg job for all columns at once. Columns whose range is all-null
-    * are dropped (nothing to bound on). Each entry is
-    * (column, numericComparator, loValue, hiValue).
-    */
-  private def keyRangeBounds(
-      df: DataFrame, statCols: Seq[(String, Boolean)]): Seq[(String, Boolean, Any, Any)] = {
-    if (statCols.isEmpty) return Nil
-    val aggs = statCols.flatMap { case (k, _) => Seq(min(col(k)), max(col(k))) }
-    val r = df.agg(aggs.head, aggs.tail: _*).collect().head
-    statCols.zipWithIndex.collect {
-      case ((k, numeric), i) if !r.isNullAt(2 * i) && !r.isNullAt(2 * i + 1) =>
-        (k, numeric, r.get(2 * i), r.get(2 * i + 1))
-    }
-  }
-
-  /** Conjunctive multi-column key-range prune: a file survives only if
-    * its recorded stats may intersect [lo, hi] on EVERY bounded column
-    * — a composite key like (tenant, _id) prunes on both, not just the
-    * leading column (a low-cardinality leading key alone barely prunes
-    * at 100 TB). Per column the test is [[pruneByKeyStats]], so each
-    * dimension stays conservative (missing stat ⇒ that dimension keeps
-    * the file); output preserves snapshot file order.
-    */
-  private def pruneConjunctive(
-      snaps: Seq[Snapshot],
-      pick: Snapshot => Seq[String],
-      bounds: Seq[(String, Boolean, Any, Any)]): Seq[String] =
-    if (bounds.isEmpty) snaps.flatMap(pick)
-    else {
-      val keepSets = bounds.map { case (k, numeric, lo, hi) =>
-        pruneByKeyStats(snaps, pick, k,
-          Some(String.valueOf(lo)), Some(String.valueOf(hi)), numeric).toSet
+    // bloom probes: one key set per EqualTo/In conjunct on the bloom
+    // column, each key hashable under the column's type
+    val probes: Seq[Seq[Long]] = m.properties.get(IceliteTable.BloomColProp).toSeq
+      .flatMap(bc => m.schema.find(_.name == bc)).flatMap { field =>
+        def keys(f: Filter): Seq[Seq[Any]] = f match {
+          case sources.And(l, r) => keys(l) ++ keys(r)
+          case sources.EqualTo(c, v) if c == field.name => Seq(Seq(v))
+          case sources.In(c, vs) if c == field.name => Seq(vs.toSeq)
+          case _ => Nil
+        }
+        filters.flatMap(keys).map(_.map(IceliteTable.bloomProbeHash(_, field.dataType)))
+          .filter(_.forall(_.isDefined)).map(_.flatten)
       }
-      snaps.flatMap(pick).filter(f => keepSets.forall(_.contains(f)))
+    val blooms = if (probes.isEmpty) Map.empty[String, Array[Byte]] else loadBlooms()
+    def bloomHolds(f: String): Boolean = blooms.get(f).forall { bytes =>
+      val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
+        new java.io.ByteArrayInputStream(bytes))
+      probes.forall(_.exists(bf.mightContainLong))
     }
-
-  /** MoR read restricted to the SOURCE's key range on EVERY prunable
-    * key column (conjunctive overlap) — the [[merge]] target scan: a
-    * small batch against a huge table touches only the files that can
-    * hold a matching key, and a composite key like (tenant, _id)
-    * prunes on the selective trailing column even when the leading one
-    * is low-cardinality. Falls back to the full [[read]] when no key
-    * column is prunable or every prunable column's source range is
-    * all-null (conservative, never wrong).
-    *
-    * Rows are also row-filtered to keys in [min, max] per bounded
-    * column: kept files may carry out-of-range keys whose DELETE files
-    * were legitimately pruned (a delete outside the range cannot
-    * affect a key inside it), and without the bound those rows would
-    * surface as deleted-row zombies to any caller other than a
-    * key-equi join. With the bound, every returned NON-NULL-keyed row
-    * is MoR-exact; rows whose key is null in any bounded column are
-    * EXCLUDED (the range bound never matches null) — fine for
-    * [[merge]]'s equi-join, where null keys can never match, but a
-    * future non-equi-join caller wanting read() parity on null keys
-    * must OR in `col(k).isNull` itself. The one extra job is a
-    * single multi-column agg over the (small) source.
-    */
-  private[table] def readForKeyRange(source: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val m = cachedMeta
-    val bounds = keyRangeBounds(source, keyStatColumns(keyCols, m.schema))
-    if (bounds.isEmpty) read()
-    else {
-      val dataFiles = pruneConjunctive(m.snapshots, _.dataFiles, bounds)
-      // prune within the EFFECTIVE eq-delete state: files a full DV
-      // consolidation already resolved positionally never re-join
-      val eqLive = eqDeleteState(m.snapshots).toSet
-      val delFiles = pruneConjunctive(m.snapshots, _.deleteFiles, bounds)
-        .filter(eqLive)
-      // pos deletes / DVs carry no key stats — never pruned
-      val rowBound = bounds.map { case (k, _, lo, hi) =>
-        col(k) >= lit(lo) && col(k) <= lit(hi)
-      }.reduce(_ && _)
-      val data = readFilesAs(dataFiles, m.schema, Long.MaxValue,
-        withPos = needPosCols(m.snapshots)).filter(rowBound)
-      applyDeletes(applyPosState(data, m.snapshots), delFiles)
-        .select(m.schema.fieldNames.map(col).toSeq: _*)
-    }
+    val bs = filters.flatMap(bounds)
+    val keyCols = keyStatColumns(tableKeyColumns(m.properties), m.schema).map(_._1).toSet
+    val keyBs = bs.filter(b => keyCols(b._1))
+    (snaps.flatMap(s => keep(s, s.dataFiles, bs).filter(bloomHolds)),
+      snaps.flatMap(s => keep(s, s.deleteFiles, keyBs)))
   }
 
-  /** Data files whose stored [partCol] range may intersect
-    * [lower, upper] (inclusive, either side optional) — pure table
-    * metadata, no file IO. Files without stats are kept (never prune
-    * on missing information). Prunable: year/month/day/hour/bucket
-    * transforms plus identity over integral/string base columns (see
-    * [[prunableColumns]]).
+  /** `planFiles` calls on this handle — a test hook proving metadata
+    * tables stay join-based instead of planning once per partition value.
     */
-  def pruneDataFiles(
-      partCol: String, lower: Option[String], upper: Option[String]): Seq[String] = {
-    IceliteTable.pruneCalls.incrementAndGet() // test hook: loop detection
-    pruneByKeyStats(cachedMeta.snapshots, _.dataFiles, partCol, lower, upper,
-      pruneComparatorFor(partCol))
-  }
+  private[table] val planCalls = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** MoR read restricted to one partition-column range: files outside
-    * the range are pruned from metadata stats (the Iceberg-manifest
-    * read path), then the exact row-level bound is applied on the
-    * derived column RECOMPUTED from its base column — exact for files
-    * of any spec generation, including files written before a
-    * [[evolvePartitioning]] (which lack the stored column) and after
-    * (which lack the retired one). At 100 TB this touches
-    * files-in-range + all delete files, never the whole table.
+  /** `k >= min(k) AND k <= max(k)` over `df` for every key column with a
+    * sound stat ordering ([[keyStatColumns]]) — one agg job for all
+    * columns at once; an all-null column bounds nothing. As a [[scan]]
+    * row bound these exclude NULL keys, which no key equi-join matches.
     */
-  def readRange(partCol: String, lower: Option[String], upper: Option[String]): DataFrame = {
-    val m = cachedMeta
-    val p = (m.partitioning ++ retiredPartitioning).find(partColName(_) == partCol)
-      .getOrElse(throw new IllegalArgumentException(s"unknown partition column $partCol"))
-    requireSessionTz(Seq(p))
-    val keep = pruneDataFiles(partCol, lower, upper).toSet
-    val dt = addPartitionFields(m.schema, Seq(p)).fields.last.dataType
-    // stored derived columns are ignored (projected away by the
-    // reader); the transform is recomputed below from the base column
-    val data = readFilesAs(m.liveDataFiles.filter(keep.contains), m.schema, Long.MaxValue,
-      withPos = needPosCols(m.snapshots))
-    val bounded = data
-      .withColumn(partCol, transformColumn(p)._2)
-      .filter(lower.map(lo => col(partCol) >= lit(lo).cast(dt)).getOrElse(lit(true)))
-      .filter(upper.map(hi => col(partCol) <= lit(hi).cast(dt)).getOrElse(lit(true)))
-    applyDeletes(applyPosState(bounded, m.snapshots), eqDeleteState(m.snapshots))
-      .select(m.schema.fieldNames.map(col).toSeq: _*)
-  }
-
-  /** MoR read restricted to one Z-ORDER column's range: files outside
-    * [lower, upper] are pruned from the recorded footer stats (the
-    * payoff of [[compact]]'s z-order layout — a range on ANY z
-    * dimension skips files, not just the leading sort key), then the
-    * exact row-level bound is applied on the raw column. Z columns are
-    * real integral table columns, so no transform recompute is needed;
-    * files written after the z rewrite (no z stats) are always kept.
-    */
-  def readZRange(zCol: String, lower: Option[Long], upper: Option[Long]): DataFrame =
-    readZBox(Seq((zCol, lower, upper)))
-
-  /** MoR read restricted to a conjunctive BOX over several z-order
-    * columns — the actual z-order use case: a 2-D box query intersects
-    * the per-dimension keep-sets before reading, so it reads strictly
-    * fewer files than either single-dimension range when both
-    * dimensions are selective. Each dimension prunes exactly like
-    * [[readZRange]] (files without that column's stats are kept BY
-    * that dimension); the exact row bound is the conjunction of all
-    * ranges.
-    */
-  def readZBox(boxBounds: Seq[(String, Option[Long], Option[Long])]): DataFrame = {
-    val m = cachedMeta
-    require(boxBounds.nonEmpty, "readZBox needs at least one z-column bound")
-    boxBounds.foreach { case (zCol, _, _) =>
-      require(zorderColumns(m.properties).contains(zCol),
-        s"'$zCol' is not a z-order column of $name (have: " +
-          s"${zorderColumns(m.properties).mkString(", ")})")
-    }
-    val keep = boxBounds.map { case (zCol, lower, upper) =>
-      pruneDataFiles(zCol, lower.map(_.toString), upper.map(_.toString)).toSet
-    }.reduce(_ intersect _)
-    val rowBound = boxBounds.map { case (zCol, lower, upper) =>
-      lower.map(lo => col(zCol) >= lo).getOrElse(lit(true)) &&
-        upper.map(hi => col(zCol) <= hi).getOrElse(lit(true))
-    }.reduce(_ && _)
-    val data = readFilesAs(m.liveDataFiles.filter(keep.contains), m.schema, Long.MaxValue,
-      withPos = needPosCols(m.snapshots))
-      .filter(rowBound)
-    applyDeletes(applyPosState(data, m.snapshots), eqDeleteState(m.snapshots))
-      .select(m.schema.fieldNames.map(col).toSeq: _*)
+  private[table] def keyRangeFilters(df: DataFrame, keyCols: Seq[String]): Seq[Filter] = {
+    val ks = keyStatColumns(keyCols, cachedMeta.schema).map(_._1)
+    if (ks.isEmpty) return Nil
+    val aggs = ks.flatMap(k => Seq(min(col(k)), max(col(k))))
+    val r = df.agg(aggs.head, aggs.tail: _*).collect().head
+    ks.indices.filterNot(i => r.isNullAt(2 * i)).flatMap(i => Seq(
+      sources.GreaterThanOrEqual(ks(i), r.get(2 * i)),
+      sources.LessThanOrEqual(ks(i), r.get(2 * i + 1))))
   }
 
   /** Declare columns whose per-file min/max every FUTURE write records
@@ -4358,7 +4260,7 @@ final class IceliteTable private (
     * steady-state appends land in arrival order (no per-batch sort
     * tax), and the next [[compact]] range-partitions + sorts the
     * rewrite on them, so files own DISJOINT sort-key ranges and any
-    * later [[readStatRange]] on a declared stat column prunes to the
+    * later [[scan]] filtering a declared stat column prunes to the
     * few files whose bounds intersect. The one-dimensional sibling of
     * z-order (an explicit `zorderBy` on compact wins when both are
     * declared). Metadata-only commit.
@@ -4400,48 +4302,6 @@ final class IceliteTable private (
           Nil, Nil, 0L)), seq)
     }
   }
-
-  /** MoR read restricted to one DECLARED stat column's range — general
-    * predicate file skipping, the Iceberg scan-planning shape: files
-    * whose recorded [col] min/max cannot intersect [lower, upper] are
-    * pruned from metadata alone (no file IO), then the exact row bound
-    * applies to the survivors and the MoR delete merge runs over the
-    * FULL delete set (a delete's key says nothing about this column,
-    * so delete files are never pruned here). Files without the stat
-    * (written pre-declaration, or all-null in the column) are kept.
-    * Rows NULL in the column are excluded — a range never matches
-    * null, same contract as [[readRange]].
-    *
-    * At 100 TB: a selective predicate on ANY declared column touches
-    * files-in-range + delete files, never the whole table — provided
-    * the layout clusters that column (writes sorted/ranged on it, or
-    * [[compact]] z-ordered); on a scattered layout every file
-    * legitimately overlaps and the read degrades to [[read]] plus a
-    * filter, never to a wrong answer.
-    */
-  def readStatRange(statCol: String, lower: Option[Any], upper: Option[Any]): DataFrame = {
-    val m = cachedMeta
-    require(IceliteTable.statColumns(m.properties).exists(_.equalsIgnoreCase(statCol)),
-      s"'$statCol' is not a declared stat column of $name " +
-        s"(trackStats first; have: ${IceliteTable.statColumns(m.properties).mkString(", ")})")
-    val Seq((canonical, numeric)) = keyStatColumns(Seq(statCol), m.schema)
-    val keep = pruneByKeyStats(m.snapshots, _.dataFiles, canonical,
-      lower.map(String.valueOf), upper.map(String.valueOf), numeric).toSet
-    val rowBound =
-      lower.map(lo => col(canonical) >= lit(lo)).getOrElse(lit(true)) &&
-        upper.map(hi => col(canonical) <= lit(hi)).getOrElse(lit(true))
-    val data = readFilesAs(m.liveDataFiles.filter(keep.contains), m.schema, Long.MaxValue,
-      withPos = needPosCols(m.snapshots))
-      .filter(rowBound)
-    applyDeletes(applyPosState(data, m.snapshots), eqDeleteState(m.snapshots))
-      .select(m.schema.fieldNames.map(col).toSeq: _*)
-  }
-
-  /** Declared-stat-column comparators for a write ([[trackStats]]),
-    * merged into every write path's footer-stat request.
-    */
-  private def trackedStats(props: Map[String, String], schema: StructType): Map[String, Boolean] =
-    keyStatColumns(IceliteTable.statColumns(props), schema).toMap
 
   // ------------------------------------------------ key bloom filters
 
@@ -4519,50 +4379,6 @@ final class IceliteTable private (
     built.length
   }
 
-  /** MoR POINT LOOKUP: rows whose bloom key column matches any of
-    * `keys`, reading only the files whose per-file bloom might contain
-    * one of them — the skip min/max bounds cannot provide when the key
-    * is hash-scattered across files. False positives only cost an
-    * extra file read (the exact row filter runs after); files without
-    * a filter (written since the last [[buildKeyBlooms]]) are always
-    * kept; delete files are never pruned, so the MoR merge is exact.
-    * At 100 TB a k-key lookup touches ~k files + deletes, not the
-    * table.
-    */
-  /** Data files whose bloom might contain any of `keys` (files without
-    * a filter kept) — the metadata-only keep-set [[readForKeys]] reads.
-    */
-  private[table] def pruneByBlooms(keys: Seq[Any]): Seq[String] = {
-    val m = cachedMeta
-    val keyCol = m.properties.getOrElse(IceliteTable.BloomColProp,
-      throw new IllegalStateException(s"no key blooms on $name — buildKeyBlooms first"))
-    val dt = m.schema(m.schema.fieldIndex(keyCol)).dataType
-    val hs = keys.map(IceliteTable.bloomProbeHash(_, dt))
-    val blooms = loadBlooms()
-    m.liveDataFiles.filter { f =>
-      blooms.get(f) match {
-        case Some(bytes) =>
-          val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(bytes))
-          hs.exists(bf.mightContainLong)
-        case None => true
-      }
-    }
-  }
-
-  def readForKeys(keys: Seq[Any]): DataFrame = {
-    require(keys.nonEmpty, "readForKeys needs at least one key")
-    val m = cachedMeta
-    val keyCol = m.properties.getOrElse(IceliteTable.BloomColProp,
-      throw new IllegalStateException(s"no key blooms on $name — buildKeyBlooms first"))
-    val kept = pruneByBlooms(keys)
-    val data = readFilesAs(kept, m.schema, Long.MaxValue,
-      withPos = needPosCols(m.snapshots))
-      .filter(col(keyCol).isin(keys: _*))
-    applyDeletes(applyPosState(data, m.snapshots), eqDeleteState(m.snapshots))
-      .select(m.schema.fieldNames.map(col).toSeq: _*)
-  }
-
   /** At-rest bytes of committed files: the sizes recorded in snapshot
     * `fileMetrics` at commit time, one `getFileStatus` only for a file
     * committed without them (position-delete and DV files, older
@@ -4618,10 +4434,9 @@ final class IceliteTable private (
     * partition + in-partition sort on the bit-interleaved 16-bit rank
     * of each z column — the Iceberg zorder rewrite layout. The z value
     * is a transient layout key (computed, ranged on, dropped); row
-    * values and schema are untouched. `extraStatCols` adds raw columns
-    * (z-order / key columns, mapped to whether their stat comparator
-    * is numeric) to the footer stats so range reads and key-range
-    * pruning can skip files on them.
+    * values and schema are untouched. Footer stats are recorded for
+    * the head's [[recordedStatColumns]] plus the z columns, the set
+    * [[planFiles]] prunes on.
     */
   /** Sort columns the CURRENT write should land under: the declared
     * sort order when the thread is inside [[IceliteTable.withSortedWrite]]
@@ -4634,13 +4449,13 @@ final class IceliteTable private (
   private def writeDataFiles(
       df: DataFrame,
       commitId: String,
-      partitioning: Seq[PartitionConfig],
+      head: TableMeta,
       nFiles: Option[Int],
       zorder: Seq[(String, Long, Long)] = Nil,
-      sortBy: Seq[String] = Nil,
-      extraStatCols: Map[String, Boolean] = Map.empty)
+      sortBy: Seq[String] = Nil)
       : (Seq[String], Long, Map[String, Map[String, (String, String)]],
         Map[String, (Long, Long)]) = {
+    val partitioning = head.partitioning
     requireSessionTz(partitioning)
     val out = s"$location/data/$commitId"
     var d = df
@@ -4659,7 +4474,7 @@ final class IceliteTable private (
       // declared LINEAR sort order (the one-dimension sibling of the
       // z-order path): range-partition on (partition cols, sort cols)
       // so files own disjoint sort-key ranges, then sort within each —
-      // footer min/max become tight and readStatRange prunes by file
+      // footer min/max become tight and planFiles prunes by file
       val keys = partCols.map(p => col(p._1)) ++ sortBy.map(col)
       val ranged = nFiles match {
         case Some(n) => d.repartitionByRange(n, keys: _*)
@@ -4683,7 +4498,9 @@ final class IceliteTable private (
     val listed = graft.util.Phase.timed("write.list")(listParquetInfos(out))
     val files = listed.map(_._1)
     val sizes = listed.toMap
-    val statCols = prunableColumns(partitioning, df.schema) ++ extraStatCols
+    // the z columns of THIS rewrite join the set before the commit
+    // records them in the table properties
+    val statCols = recordedStatColumns(head) ++ zorder.map(_._1 -> true)
     val infos = graft.util.Phase.timed("write.footers")(
       files.map(f => f -> footerInfo(f, statCols)))
     val stats = infos.collect { case (f, (_, s)) if s.nonEmpty => f -> s }.toMap
@@ -4767,7 +4584,7 @@ object IceliteTable {
     * batch range-partitions + sorts on (partition cols, declared sort
     * cols) inside `writeDataFiles` — the compaction layout applied at
     * write time, so the landed files own disjoint sort-key ranges and
-    * `readStatRange` prunes without waiting for the next compact. The
+    * `planFiles` prunes without waiting for the next compact. The
     * SQL write surface sets it for tables with a declared sort order
     * (Iceberg's `write.sort-order` behavior); the Scala `append` keeps
     * the documented arrival-order trade unless wrapped. Thread-local
@@ -4863,12 +4680,6 @@ object IceliteTable {
       case _ => a.orElse(b)
     }
   }
-
-  /** JVM-global [[pruneDataFiles]] call counter — a test hook (like
-    * ShingleIndex.builds) proving metadata-table code paths stay
-    * join-based instead of looping the prune per partition value.
-    */
-  val pruneCalls = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Hidden per-row commit sequence column (MoR ordering). */
   val SeqCol = "_graft_seq"
@@ -5033,6 +4844,28 @@ object IceliteTable {
     */
   val CherryPickStageKey = "graft.wap.stage-id"
 
+  /** A DSv2 source [[Filter]] as a Column; None for a shape with no
+    * translation (the SQL scan leaves it to Spark as a residual).
+    */
+  def filterColumn(f: Filter): Option[Column] = f match {
+    case sources.EqualTo(a, v) => Some(col(a) === v)
+    case sources.EqualNullSafe(a, v) => Some(col(a) <=> v)
+    case sources.GreaterThan(a, v) => Some(col(a) > v)
+    case sources.GreaterThanOrEqual(a, v) => Some(col(a) >= v)
+    case sources.LessThan(a, v) => Some(col(a) < v)
+    case sources.LessThanOrEqual(a, v) => Some(col(a) <= v)
+    case sources.In(a, vs) => Some(col(a).isInCollection(vs.toSeq))
+    case sources.IsNull(a) => Some(col(a).isNull)
+    case sources.IsNotNull(a) => Some(col(a).isNotNull)
+    case sources.StringStartsWith(a, v) => Some(col(a).startsWith(v))
+    case sources.StringEndsWith(a, v) => Some(col(a).endsWith(v))
+    case sources.StringContains(a, v) => Some(col(a).contains(v))
+    case sources.Not(c) => filterColumn(c).map(!_)
+    case sources.And(l, r) => for (a <- filterColumn(l); b <- filterColumn(r)) yield a && b
+    case sources.Or(l, r) => for (a <- filterColumn(l); b <- filterColumn(r)) yield a || b
+    case _ => None
+  }
+
   /** Stat-string comparison under the column's declared comparator:
     * numeric for int transforms (year/bucket) and integral key
     * columns, UTF-8 BYTE order otherwise. Byte order matters: parquet
@@ -5088,7 +4921,7 @@ object IceliteTable {
 
   /** Table property recording the z-order clustering columns of the
     * latest zorder rewrite — registers those raw integral columns as
-    * numeric-comparable for metadata pruning (`pruneDataFiles`).
+    * numeric-comparable for metadata pruning (`planFiles`).
     */
   val ZorderColumnsProp = "graft.zorder.columns"
 
@@ -5107,7 +4940,7 @@ object IceliteTable {
   /** Table property listing the DECLARED stat columns (Iceberg's
     * `write.metadata.metrics` shape): every write after
     * [[IceliteTable.trackStats]] records per-file footer min/max for
-    * these columns, so [[IceliteTable.readStatRange]] can skip files
+    * these columns, so [[IceliteTable.planFiles]] can skip files
     * on ANY declared column's predicate — not just key/partition/z
     * columns.
     */
@@ -5123,20 +4956,22 @@ object IceliteTable {
 
   /** Driver-side twin of the build-time bloom key mapping: integral
     * keys pass through, string keys take the 60-bit md5 prefix — the
-    * same bits `conv(substring(md5(c), 1, 15), 16, 10)` produces.
+    * same bits `conv(substring(md5(c), 1, 15), 16, 10)` produces. None
+    * for a key whose type differs from the column's (or null): a
+    * cross-type compare runs through a cast the build did not hash.
     */
-  private[table] def bloomProbeHash(k: Any, dt: org.apache.spark.sql.types.DataType): Long = {
+  private[table] def bloomProbeHash(k: Any, dt: org.apache.spark.sql.types.DataType): Option[Long] = {
     import org.apache.spark.sql.types._
-    dt match {
-      case StringType =>
+    (dt, k) match {
+      case (StringType, s: String) =>
         val d = java.security.MessageDigest.getInstance("MD5")
-          .digest(k.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         val hex = d.map("%02x".format(_)).mkString.take(15)
-        java.lang.Long.parseLong(hex, 16)
-      case ByteType | ShortType | IntegerType | LongType =>
-        k.asInstanceOf[Number].longValue
-      case other => throw new IllegalArgumentException(
-        s"key blooms need an integral or string column, got ${other.catalogString}")
+        Some(java.lang.Long.parseLong(hex, 16))
+      case (ByteType | ShortType | IntegerType | LongType,
+          n @ (_: java.lang.Long | _: java.lang.Integer | _: java.lang.Short | _: java.lang.Byte)) =>
+        Some(n.asInstanceOf[Number].longValue)
+      case _ => None
     }
   }
 

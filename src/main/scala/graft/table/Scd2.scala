@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.LongType
   * Scale shape (100 TB dimension, batch-sized updates): the ONLY
   * full-table touch is one broadcast LEFT-SEMI filter that cuts the
   * open-version scan down to the update keys (at Iceberg scale the
-  * per-file key blooms of [[IceliteTable.readForKeys]] prune the same
+  * per-file key blooms [[IceliteTable.planFiles]] reads prune the same
   * scan to ~|keys| files); every subsequent join is batch×batch and
   * broadcastable, and the closing MERGE is key-range pruned. No-op
   * resends (a row whose tracked attributes all match the open version,

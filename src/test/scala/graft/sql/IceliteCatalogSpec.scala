@@ -306,4 +306,71 @@ class IceliteCatalogSpec extends AnyFunSuite with SparkFixture {
       assert(jobs.size <= 2, s"_id = $id ran ${jobs.size} jobs:\n${jobs.mkString("\n")}")
     }
   }
+
+  /** Basenames of the data files a SQL query's icelite scan reads: the
+    * file scans in the lineage of the V1 scan's RDD (the delete sides
+    * broadcast, so only data files appear there).
+    */
+  private def scannedDataFiles(q: org.apache.spark.sql.DataFrame, t: IceliteTable): Set[String] = {
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.execution.datasources.FileScanRDD
+    val rdd = q.queryExecution.sparkPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.RowDataSourceScanExec => s.rdd
+    }.getOrElse(fail(s"no icelite scan in\n${q.queryExecution.sparkPlan}"))
+    def walk(r: RDD[_]): Seq[String] = (r match {
+      case f: FileScanRDD => f.filePartitions.flatMap(_.files.map(_.toPath.getName))
+      case _ => Nil
+    }) ++ r.dependencies.flatMap(d => walk(d.rdd))
+    val data = t.meta.liveDataFiles.map(_.split('/').last).toSet
+    walk(rdd).toSet.intersect(data)
+  }
+
+  test("SQL _id point and range reads plan a strict file subset over every delete kind") {
+    import spark.implicits._
+    import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, LessThan}
+    val t = IceliteTable.create(spark, wh, "ns", "t_planned",
+      Seq((0L, 0L)).toDF("_id", "v").schema)
+    t.append((1L to 400L).map(i => (i, i)).toDF("_id", "v"))
+    t.upsert(Seq((400L, -400L)).toDF("_id", "v"), Seq("_id")) // records _id as the key
+    t.declareSortOrder(Seq("_id"))
+    t.compact(targetFileMB = 256, Nil, numFilesOverride = Some(4)) // 4 disjoint _id bands
+    t.deleteWhere(col("_id") === 150L)
+    t.consolidateDeleteVectors() // a DV generation
+    t.deleteWhere(col("_id") === 250L) // position deletes after it
+    t.upsert(Seq((50L, -50L)).toDF("_id", "v"), Seq("_id")) // equality delete of 50's old row
+    t.delete(Seq(320L).toDF("_id"), Seq("_id")) // equality delete of 320
+    assert(t.meta.liveDvFiles.nonEmpty && t.meta.livePosDeleteFiles.nonEmpty)
+    val del320 = t.meta.snapshots.last.deleteFiles
+    assert(del320.nonEmpty)
+    val allData = t.meta.liveDataFiles.map(_.split('/').last).toSet
+    def check(where: String, filters: Seq[org.apache.spark.sql.sources.Filter],
+        want: org.apache.spark.sql.Column): Set[String] = {
+      val q = spark.sql(s"SELECT _id, v FROM $cat.ns.t_planned WHERE $where")
+      val got = q.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+      val exp = t.read().filter(want).collect().map(r => (r.getLong(0), r.getLong(1)))
+        .sortBy(_._1).toSeq
+      assert(got == exp, s"WHERE $where")
+      val scanned = scannedDataFiles(q, t)
+      assert(scanned.nonEmpty && scanned.size < allData.size,
+        s"WHERE $where scanned ${scanned.size} of ${allData.size} data files")
+      // the planner the SQL scan runs keeps the same files
+      assert(scanned == t.planFiles(t.meta.snapshots, filters)._1.map(_.split('/').last).toSet)
+      scanned
+    }
+    // point read of the upserted key: its new version only
+    check("_id = 50", Seq(EqualTo("_id", 50L)), col("_id") === 50L)
+    assert(spark.sql(s"SELECT v FROM $cat.ns.t_planned WHERE _id = 50").as[Long].collect()
+      .toSeq == Seq(-50L))
+    // range over the band holding 320, whose delete file planning drops:
+    // the band's file still holds 320's old row, bounded away before the merge
+    val band = Seq(GreaterThanOrEqual("_id", 330L), LessThan("_id", 360L))
+    check("_id >= 330 AND _id < 360", band, col("_id") >= 330L && col("_id") < 360L)
+    assert(t.planFiles(t.meta.snapshots, band)._2.intersect(del320).isEmpty)
+    assert(t.scan(band).count() == 30)
+    // the DV and position-deleted rows stay deleted in the bands that hold them
+    check("_id >= 140 AND _id < 160", Seq(GreaterThanOrEqual("_id", 140L), LessThan("_id", 160L)),
+      col("_id") >= 140L && col("_id") < 160L)
+    check("_id = 250", Seq(EqualTo("_id", 250L)), col("_id") === 250L)
+    assert(spark.sql(s"SELECT * FROM $cat.ns.t_planned WHERE _id IN (150, 250, 320)").count() == 0)
+  }
 }

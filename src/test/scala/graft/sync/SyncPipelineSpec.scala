@@ -393,42 +393,6 @@ class SyncPipelineSpec extends AnyFunSuite with SparkFixture {
     assert(updated.getDecimal(1).toPlainString == "33.330000000")
   }
 
-  test("checkpoint in the pre-split shared table is visible and migrated on read") {
-    import graft.table.IceliteTable
-    val wh = Files.createTempDirectory("sync-wh").toString
-    // a pre-r10 deployment left its checkpoint in the SHARED table;
-    // without the fallback a resumed sync would see no checkpoint,
-    // truncate its target, and re-run the full initial sync
-    val legacy = IceliteTable.create(spark, wh, CheckpointStore.Namespace,
-      CheckpointStore.LegacyTableName, CheckpointStore.Schema)
-    val rec = CheckpointRecord("db.legacy", SyncState.SteadyState, "db", "legacy",
-      Some(42L), Some("hwm-10"), 100L, 7L, 3L, 1700000000000L)
-    legacy.upsert(
-      spark.createDataFrame(java.util.List.of(CheckpointStore.toRow(rec)),
-        CheckpointStore.Schema),
-      Seq("sync_id"))
-    val store = new CheckpointStore(spark, wh)
-    assert(store.read("db.legacy").contains(rec))
-    // migrated on first read: the per-sync table now owns the row, so a
-    // brand-new store (cold cache) resolves it without the legacy table
-    val perSync = IceliteTable.load(spark, wh, CheckpointStore.Namespace,
-      CheckpointStore.tableName("db.legacy"))
-    assert(perSync.read().count() == 1)
-    assert(new CheckpointStore(spark, wh).read("db.legacy").contains(rec))
-    // ops surface: exactly one row for the sync (per-sync supersedes
-    // legacy), and an unmigrated legacy-only sync still shows up
-    val rec2 = rec.copy(syncId = "db.other", sourceCollection = "other")
-    legacy.upsert(
-      spark.createDataFrame(java.util.List.of(CheckpointStore.toRow(rec2)),
-        CheckpointStore.Schema),
-      Seq("sync_id"))
-    val all = store.all()
-    assert(all.filter(col("sync_id") === "db.legacy").count() == 1)
-    assert(all.filter(col("sync_id") === "db.other").count() == 1)
-    // a sync with no checkpoint anywhere still reads None
-    assert(store.read("db.absent").isEmpty)
-  }
-
   test("rebuild intent survives a crash: restart truncates and resyncs from the checkpoint alone") {
     val root = Files.createTempDirectory("sync-fix")
     val wh = Files.createTempDirectory("sync-wh").toString
@@ -526,7 +490,7 @@ class SyncPipelineSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("partitioned sync: transform columns recorded with stats; readRange prunes the synced table") {
-    import graft.table.IceliteTable
+    import graft.table.{IceliteTable, RangeFilters}
     val root = Files.createTempDirectory("sync-fix")
     val wh = Files.createTempDirectory("sync-wh").toString
     val c = CollectionSyncConfig(
@@ -543,11 +507,12 @@ class SyncPipelineSpec extends AnyFunSuite with SparkFixture {
     val table = orch.syncCollection(c, Files.createTempDirectory("ck").toString)
     val partCol = IceliteTable.partColName(PartitionConfig("orderDate", "month"))
     assert(table.meta.snapshots.exists(_.fileStats.nonEmpty))
-    val jan = table.readRange(partCol, Some("2024-01"), Some("2024-01"))
+    val jan = table.scan(RangeFilters(partCol, Some("2024-01"), Some("2024-01")))
     assert(jan.count() == 25)
-    assert(table.readRange(partCol, Some("2024-02"), None).count() == 0)
+    val fromFeb = RangeFilters(partCol, Some("2024-02"), None)
+    assert(table.scan(fromFeb).count() == 0)
     // pruning answered the out-of-range query from metadata alone
-    assert(table.pruneDataFiles(partCol, Some("2024-02"), None).isEmpty)
+    assert(table.planFiles(table.meta.snapshots, fromFeb)._1.isEmpty)
   }
 
   test("state machine decision table + backoff curve") {

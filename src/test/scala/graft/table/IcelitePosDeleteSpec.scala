@@ -67,7 +67,7 @@ class IcelitePosDeleteSpec extends AnyFunSuite with SparkFixture {
     t.upsert(rows((1L, "a", 1.0), (2L, "a", 9.0), (3L, "b", 5.0)), Seq("id"))
     t.deleteWhere(col("score") > 8.0)
     val probe = rows((2L, "a", 0.0), (3L, "b", 0.0))
-    val got = t.readForKeyRange(probe.select("id"), Seq("id"))
+    val got = t.scan(t.keyRangeFilters(probe.select("id"), Seq("id")))
       .orderBy("id").collect().map(_.getLong(0)).toSeq
     assert(got == Seq(3L)) // id 2 pos-deleted; id 1 may prune, ids asked for are exact
   }

@@ -4,14 +4,15 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.EqualTo
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
 
-/** Key-range footer-stat pruning (IceliteTable.keyStatColumns /
-  * pruneByKeyStats / readForKeyRange and their use inside merge and
-  * readChanges): a narrow key range must plan a STRICT SUBSET of the
+/** Footer-stat scan planning (IceliteTable.keyStatColumns / planFiles /
+  * scan and their use inside merge and readChanges): a narrow key,
+  * z-order or partition range must plan a STRICT SUBSET of the
   * table's files, under the right comparator, while never pruning on
   * missing information — and the pruned read paths must return exactly
   * what the unpruned ones would.
@@ -70,15 +71,16 @@ class IcelitePruningSpec extends AnyFunSuite with SparkFixture {
     // narrow range [1000, 1009]: keeps the matching commit + the
     // stat-less file; prunes [1..9] and [10..19]. Lexicographically
     // "9" > "1000" would KEEP the [1..9] file — numeric compare must win.
-    val kept = t.pruneByKeyStats(t.meta.snapshots, _.dataFiles, "id", Some("1000"), Some("1009"), numeric = true)
+    def plan(lo: Long, hi: Long) = t.planFiles(t.meta.snapshots, RangeFilters("id", Some(lo), Some(hi)))
+    val kept = plan(1000L, 1009L)._1
     val s4Files = t.meta.snapshots.last.dataFiles
     assert(kept.toSet == (statless ++ s4Files).toSet)
     assert(kept.size < all.size) // strict subset
     // range that misses everything still keeps the stat-less file
-    val none = t.pruneByKeyStats(t.meta.snapshots, _.dataFiles, "id", Some("5000"), Some("6000"), numeric = true)
+    val none = plan(5000L, 6000L)._1
     assert(none.toSet == statless.toSet)
     // delete files prune through the same path (s2-s4 upserts carry them)
-    val delKept = t.pruneByKeyStats(t.meta.snapshots, _.deleteFiles, "id", Some("1"), Some("9"), numeric = true)
+    val delKept = plan(1L, 9L)._2
     val delAll = t.meta.liveDeleteFiles
     assert(delKept.nonEmpty && delKept.size < delAll.size)
   }
@@ -86,17 +88,20 @@ class IcelitePruningSpec extends AnyFunSuite with SparkFixture {
   test("readForKeyRange: rows in the source key range identical to full read; null range falls back") {
     val (t, _) = multiRangeTable()
     val src = kv((1000L, -1.0), (1004L, -1.0), (9999L, -1.0))
-    val pruned = t.readForKeyRange(src, Seq("id"))
+    val pruned = t.scan(t.keyRangeFilters(src, Seq("id")))
     // every row whose key CAN match the source is present and identical
     val inRange = (df: DataFrame) => df.filter(col("id").between(1000L, 9999L))
       .orderBy("id").collect().toSeq
     assert(inRange(pruned) == inRange(t.read()))
     // all-null key range: conservative fallback to the full read
     val nullSrc = kv((null, -1.0))
-    assert(t.readForKeyRange(nullSrc, Seq("id")).orderBy("id").collect().toSeq ==
+    assert(t.keyRangeFilters(nullSrc, Seq("id")).isEmpty)
+    assert(t.scan(t.keyRangeFilters(nullSrc, Seq("id"))).orderBy("id").collect().toSeq ==
       t.read().orderBy("id").collect().toSeq)
     // unsound key type: fallback too (no prunable key column)
-    assert(t.readForKeyRange(src.withColumnRenamed("id", "x"), Seq("v")).count() == t.read().count())
+    assert(t.keyRangeFilters(src.withColumnRenamed("id", "x"), Seq("v")).isEmpty)
+    assert(t.scan(t.keyRangeFilters(src.withColumnRenamed("id", "x"), Seq("v"))).count() ==
+      t.read().count())
   }
 
   test("merge against a multi-commit table: pruned target scan, state identical to expected") {
@@ -121,7 +126,7 @@ class IcelitePruningSpec extends AnyFunSuite with SparkFixture {
     // the history prune readChanges applies for range (s4, s5]: affected
     // key 1005 → only s4's data files (plus stat-less s1) are consulted
     val hist = t.meta.snapshots.filter(_.seq <= s5)
-    val kept = t.pruneByKeyStats(hist, _.dataFiles, "id", Some("1005"), Some("1005"), numeric = true)
+    val kept = t.planFiles(hist, RangeFilters("id", Some(1005L), Some(1005L)))._1
     assert(kept.size < hist.flatMap(_.dataFiles).size) // strict subset
     val ch = t.readChanges(s5 - 1, s5)
       .select("_change_type", "id", "v").orderBy("_change_type").collect()
@@ -144,18 +149,19 @@ class IcelitePruningSpec extends AnyFunSuite with SparkFixture {
     t.compact(targetFileMB = 256, zorderBy = Seq("x", "y"), numFilesOverride = Some(16))
     val total = t.meta.liveDataFiles.size
     // a quarter range on the SECOND dimension must skip files...
-    assert(t.pruneDataFiles("y", Some("0"), Some("15")).size <= total / 2)
+    val yRange = RangeFilters("y", Some(0L), Some(15L))
+    assert(t.planFiles(t.meta.snapshots, yRange)._1.size <= total / 2)
     // ...and the pruned read returns exactly the filtered rows
-    val got = t.readZRange("y", Some(0L), Some(15L))
+    val got = t.scan(yRange)
     assert(got.count() == 16 * 64)
     assert(got.agg(min("y"), max("y")).head() == Row(0L, 15L))
     assert(got.orderBy("_id").collect().toSeq ==
       t.read().filter(col("y").between(0, 15)).orderBy("_id").collect().toSeq)
-    // files appended AFTER the z rewrite have no y stats → always read
+    // files appended AFTER the z rewrite record y stats too (the z
+    // columns stay in the table's stat set) and are planned like any
     t.append(kvLike(gridSchema, ("late", 999L, 7L)))
-    assert(t.readZRange("y", Some(0L), Some(15L)).filter(col("_id") === "late").count() == 1)
-    // unknown z column rejected
-    intercept[IllegalArgumentException](t.readZRange("_id", None, None))
+    assert(t.meta.snapshots.last.fileStats.values.forall(_.contains("y")))
+    assert(t.scan(yRange).filter(col("_id") === "late").count() == 1)
   }
 
   private def kvLike(schema: StructType, data: (String, Long, Long)*): DataFrame = {
@@ -187,10 +193,9 @@ class IcelitePruningSpec extends AnyFunSuite with SparkFixture {
     val src = trows(("a", 1000L, -1.0), ("a", 1005L, -1.0))
     // leading column alone keeps BOTH 'a' commits; the id dimension
     // must cut the [1..9] one → strictly fewer files than tenant-only
-    val tenantOnly = t.pruneByKeyStats(t.meta.snapshots, _.dataFiles, "tenant",
-      Some("a"), Some("a"), numeric = false)
+    val tenantOnly = t.planFiles(t.meta.snapshots, Seq(EqualTo("tenant", "a")))._1
     val s2Files = t.meta.snapshots(1).dataFiles.toSet
-    val pruned = t.readForKeyRange(src, Seq("tenant", "id"))
+    val pruned = t.scan(t.keyRangeFilters(src, Seq("tenant", "id")))
     assert(tenantOnly.size > s2Files.size) // tenant alone under-prunes
     assert(pruned.orderBy("tenant", "id").collect().toSeq ==
       t.read().filter(col("tenant") === "a" && col("id").between(1000L, 1005L))
@@ -212,11 +217,11 @@ class IcelitePruningSpec extends AnyFunSuite with SparkFixture {
     t.append(kv((100L to 105L).map(i => (java.lang.Long.valueOf(i), i * 1.0)): _*))
     val pcol = IceliteTable.partColName(pconf)
     val all = t.meta.snapshots.flatMap(_.dataFiles)
-    val lowOnly = t.pruneDataFiles(pcol, Some("1"), Some("50"))
+    val lowOnly = t.planFiles(t.meta.snapshots, RangeFilters(pcol, Some(1L), Some(50L)))._1
     assert(lowOnly.toSet == t.meta.snapshots.head.dataFiles.toSet,
       s"identity stats must prune the high-range file (kept $lowOnly of $all)")
     // pruned range read returns exactly the rows a full read would
-    val got = t.readRange(pcol, Some("1"), Some("50"))
+    val got = t.scan(RangeFilters(pcol, Some(1L), Some(50L)))
       .select("id").collect().map(_.getLong(0)).sorted.toSeq
     assert(got == (1L to 5L))
   }
@@ -227,7 +232,11 @@ class IcelitePruningSpec extends AnyFunSuite with SparkFixture {
       kvSchema, partitioning = Seq(PartitionConfig("v", "identity")))
     t.append(kv((1L, 1.5)))
     val pcol = IceliteTable.partColName(PartitionConfig("v", "identity"))
-    intercept[IllegalArgumentException] { t.pruneDataFiles(pcol, Some("0"), None) }
+    // no comparator for the derived double column: every file is kept,
+    // and the row bound still answers exactly
+    assert(t.planFiles(t.meta.snapshots, RangeFilters(pcol, Some(0.0), None))._1 ==
+      t.meta.liveDataFiles)
+    assert(t.scan(RangeFilters(pcol, Some(0.0), None)).count() == 1)
   }
 
   test("keyStatColumns resolves case-insensitively (Spark default) with canonical names") {
@@ -256,15 +265,17 @@ class IcelitePruningSpec extends AnyFunSuite with SparkFixture {
       (col("id") % 64).as("x"), (col("id") / 64).as("y"))
     t.append(grid)
     t.compact(targetFileMB = 256, zorderBy = Seq("x", "y"), numFilesOverride = Some(16))
-    val xKeep = t.pruneDataFiles("x", Some("0"), Some("15")).toSet
-    val yKeep = t.pruneDataFiles("y", Some("0"), Some("15")).toSet
-    val boxKeep = xKeep intersect yKeep
+    val xRange = RangeFilters("x", Some(0L), Some(15L))
+    val yRange = RangeFilters("y", Some(0L), Some(15L))
+    val xKeep = t.planFiles(t.meta.snapshots, xRange)._1.toSet
+    val yKeep = t.planFiles(t.meta.snapshots, yRange)._1.toSet
+    val boxKeep = t.planFiles(t.meta.snapshots, xRange ++ yRange)._1.toSet
+    assert(boxKeep == (xKeep intersect yKeep))
     assert(boxKeep.size < xKeep.size && boxKeep.size < yKeep.size)
-    val box = t.readZBox(Seq(("x", Some(0L), Some(15L)), ("y", Some(0L), Some(15L))))
+    val box = t.scan(xRange ++ yRange)
     assert(box.count() == 16 * 16)
     assert(box.orderBy("_id").collect().toSeq ==
       t.read().filter(col("x").between(0, 15) && col("y").between(0, 15))
         .orderBy("_id").collect().toSeq)
-    intercept[IllegalArgumentException](t.readZBox(Nil))
   }
 }

@@ -106,18 +106,19 @@ class IceliteRefsSpec extends AnyFunSuite with SparkFixture {
   test("partitions metadata table: file counts are join-based, no per-value prune loop") {
     import spark.implicits._
     // several partition values × several files — the shape where a
-    // per-value pruneDataFiles loop would fire values×columns times
+    // per-value planFiles loop would fire values×columns times
     val src = (1 to 24).map(i => (i.toLong, f"2024-${i % 6 + 1}%02d-10", i.toDouble))
       .toDF("id", "d", "score").withColumn("d", col("d").cast("date"))
     val t = IceliteTable.create(spark, wh(), "ns", "partsjoin", src.schema,
       partitioning = Seq(PartitionConfig("d", "month")))
     t.append(src)
     t.append(src.withColumn("id", col("id") + 100L)) // second file set
-    val before = IceliteTable.pruneCalls.get()
+    val before = t.planCalls.get()
     val got = t.partitionsTable().orderBy(col(IceliteTable.partColName(
       PartitionConfig("d", "month")))).collect()
-    assert(IceliteTable.pruneCalls.get() == before,
-      "partitionsTable must not call pruneDataFiles per partition value")
+    // the record counts are ONE MoR read: one plan, never one per value
+    assert(t.planCalls.get() - before == 1,
+      s"partitionsTable planned ${t.planCalls.get() - before} scans, want 1")
     assert(got.length == 6)
     assert(got.forall(_.getLong(1) == 8L)) // 4 ids/month × 2 appends
     assert(got.forall(_.getLong(2) >= 1L)) // ≥1 file per populated value

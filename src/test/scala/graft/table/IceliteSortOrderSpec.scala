@@ -53,7 +53,7 @@ class IceliteSortOrderSpec extends AnyFunSuite with SparkFixture {
     }
     assert(keptAfter < 4, s"sorted compaction did not tighten bounds (kept $keptAfter)")
     // and the pruned read answers identically
-    assert(t.readStatRange("k", Some(20L), Some(40L)).orderBy("id").collect().toSeq
+    assert(t.scan(RangeFilters("k", Some(20L), Some(40L))).orderBy("id").collect().toSeq
       == expect)
   }
 
@@ -80,7 +80,7 @@ class IceliteSortOrderSpec extends AnyFunSuite with SparkFixture {
     }.sortBy(_._1)
     assert(ranges.size > 1, s"expected a multi-file write, got ${ranges.size} file(s)")
     // Spark's ordered distribution (range partition + sort) makes
-    // every pair of files disjoint on the sort key — readStatRange
+    // every pair of files disjoint on the sort key — planFiles
     // prunes steady-state appends without waiting for compaction
     ranges.sliding(2).foreach {
       case Seq((_, aMax), (bMin, _)) =>
@@ -89,7 +89,7 @@ class IceliteSortOrderSpec extends AnyFunSuite with SparkFixture {
     }
     // content unharmed and the range read answers exactly
     assert(t.read().count() == n)
-    val got = t.readStatRange("k", Some(20L), Some(21L))
+    val got = t.scan(RangeFilters("k", Some(20L), Some(21L)))
       .agg(count(lit(1)), sum(col("id"))).collect().head
     val want = (0L until n).filter(i => { val k = i * 7 % 1000; k == 20 || k == 21 })
     assert(got.getLong(0) == want.size && got.getLong(1) == want.sum)

@@ -3,6 +3,7 @@ package graft.table
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.In
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -92,21 +93,22 @@ class IceliteTableSpec extends AnyFunSuite with SparkFixture {
     assert(t.meta.snapshots.flatMap(_.dataFiles).nonEmpty)
     assert(t.meta.snapshots.forall(s => s.dataFiles.forall(s.fileStats.contains)))
     // metadata-only pruning: the February range keeps only Feb files
-    val febFiles = t.pruneDataFiles(partCol, Some("2024-02"), Some("2024-02"))
+    val febOnly = RangeFilters(partCol, Some("2024-02"), Some("2024-02"))
+    val febFiles = t.planFiles(t.meta.snapshots, febOnly)._1
     assert(febFiles.nonEmpty && febFiles.size < t.meta.liveDataFiles.size)
-    val feb = t.readRange(partCol, Some("2024-02"), Some("2024-02"))
+    val feb = t.scan(febOnly)
     assert(feb.collect().map(_.getString(0)).toSeq == Seq("b1"))
     // open-ended range + equivalence with the full read filtered by month
-    val fromFeb = t.readRange(partCol, Some("2024-02"), None)
+    val fromFeb = t.scan(RangeFilters(partCol, Some("2024-02"), None))
       .orderBy("_id").collect().map(_.getString(0)).toSeq
     assert(fromFeb == Seq("b1", "c1", "c2"))
     // stats survive metadata round-trip + compaction keeps them
     val reloaded = IceliteTable.load(spark, wh, "ns", "pruned")
-    assert(reloaded.pruneDataFiles(partCol, Some("2024-03"), None).nonEmpty)
+    assert(reloaded.planFiles(reloaded.meta.snapshots,
+      RangeFilters(partCol, Some("2024-03"), None))._1.nonEmpty)
     t.compact()
     assert(t.meta.snapshots.head.fileStats.nonEmpty)
-    assert(t.readRange(partCol, Some("2024-02"), Some("2024-02"))
-      .collect().map(_.getString(0)).toSeq == Seq("b1"))
+    assert(t.scan(febOnly).collect().map(_.getString(0)).toSeq == Seq("b1"))
   }
 
   test("commit recovers from a crash-orphaned claim file once it ages past the TTL") {
@@ -252,12 +254,12 @@ class IceliteTableSpec extends AnyFunSuite with SparkFixture {
     // range read on the RETIRED spec column: old files prune by their
     // stored stats, the new-spec file is kept (no stat) and filtered
     // row-level by the recomputed transform
-    val jan = t.readRange("_p_order_ts_month", Some("2024-01"), Some("2024-01"))
-      .orderBy("_id").collect()
+    val janOnly = RangeFilters("_p_order_ts_month", Some("2024-01"), Some("2024-01"))
+    val jan = t.scan(janOnly).orderBy("_id").collect()
     assert(jan.map(_.getString(0)).toSeq == Seq("a", "c"))
     // b's March file is pruned from metadata alone; a's old-spec file
     // and c's new-spec (stat-less on the retired column) file remain
-    val pruned = t.pruneDataFiles("_p_order_ts_month", Some("2024-01"), Some("2024-01"))
+    val pruned = t.planFiles(t.meta.snapshots, janOnly)._1
     assert(pruned.size == t.meta.liveDataFiles.size - 1)
 
     // full read sees all spec generations; reload round-trips the
@@ -265,7 +267,7 @@ class IceliteTableSpec extends AnyFunSuite with SparkFixture {
     assert(t.read().count() == 3)
     val t2 = IceliteTable.load(spark, wh, "ns", "evo")
     assert(t2.retiredPartitioning == Seq(PartitionConfig("order_ts", "month")))
-    assert(t2.readRange("_p_order_ts_month", Some("2024-01"), Some("2024-01")).count() == 2)
+    assert(t2.scan(janOnly).count() == 2)
     // compaction migrates everything to the CURRENT spec in one rewrite
     t2.compact()
     assert(t2.read().count() == 3)
@@ -368,12 +370,13 @@ class IceliteTableSpec extends AnyFunSuite with SparkFixture {
         t.append(rows(("b", 20.0, "new", "2024-02-05T00:00:00Z")))
       }
       intercept[IllegalStateException] {
-        t.readRange("_p_order_ts_month", Some("2024-01"), Some("2024-01")).collect()
+        t.scan(RangeFilters("_p_order_ts_month", Some("2024-01"), Some("2024-01"))).collect()
       }
     } finally spark.conf.set("spark.sql.session.timeZone", orig)
     // back under the pinned timezone everything works again
     t.append(rows(("b", 20.0, "new", "2024-02-05T00:00:00Z")))
-    assert(t.readRange("_p_order_ts_month", Some("2024-01"), Some("2024-01")).count() == 1)
+    assert(t.scan(RangeFilters("_p_order_ts_month", Some("2024-01"), Some("2024-01")))
+      .count() == 1)
   }
 
   test("schema evolution: added column is null for old rows, filled for new") {
@@ -430,15 +433,15 @@ class IceliteTableSpec extends AnyFunSuite with SparkFixture {
     // keeps at most half the files on either axis
     val total = t.meta.liveDataFiles.size
     assert(total > 4)
-    val px = t.pruneDataFiles("x", Some("0"), Some("15"))
-    val py = t.pruneDataFiles("y", Some("0"), Some("15"))
+    val px = t.planFiles(t.meta.snapshots, RangeFilters("x", Some(0L), Some(15L)))._1
+    val py = t.planFiles(t.meta.snapshots, RangeFilters("y", Some(0L), Some(15L)))._1
     assert(px.size <= total / 2, s"x-prune kept ${px.size}/$total")
     assert(py.size <= total / 2, s"y-prune kept ${py.size}/$total")
 
     // property survives reload; pruning still available from cold metadata
     val t2 = IceliteTable.load(spark, wh, "ns", "zgrid")
     assert(t2.meta.properties(IceliteTable.ZorderColumnsProp) == "x,y")
-    assert(t2.pruneDataFiles("y", Some("48"), None).size <= total / 2)
+    assert(t2.planFiles(t2.meta.snapshots, RangeFilters("y", Some(48L), None))._1.size <= total / 2)
   }
 
   test("merge: conditional update/delete/insert in one snapshot; t-references; dup source rejected") {
@@ -682,7 +685,6 @@ class IceliteTableSpec extends AnyFunSuite with SparkFixture {
     // file written BEFORE the declaration: no stats recorded → every
     // later prune must keep it
     t.append(rows(("pre", 5.0, "old", "2024-01-01T00:00:00Z")))
-    intercept[IllegalArgumentException](t.readStatRange("_id", Some("a"), Some("b")))
     // only integral/string columns are declarable
     intercept[IllegalArgumentException](t.trackStats(Seq("total")))
     intercept[IllegalArgumentException](t.trackStats(Seq("nope")))
@@ -695,25 +697,23 @@ class IceliteTableSpec extends AnyFunSuite with SparkFixture {
     t.append(rows(("z1", 5.0, "z", "2024-01-04T00:00:00Z"),
       ("z9", 6.0, "z", "2024-01-04T00:00:00Z")))
     // metadata keep-set: the middle band plus the statless pre file
-    val kept = t.pruneDataFiles("_id", Some("m0"), Some("mz")).toSet
+    val mBand = RangeFilters("_id", Some("m0"), Some("mz"))
+    val kept = t.planFiles(t.meta.snapshots, mBand)._1.toSet
     assert(kept.size == 2, s"expected middle file + pre-declaration file, got $kept")
     // the pruned read is row-exact, including under a later DELETE
     // whose delete file is never pruned
-    assert(t.readStatRange("_id", Some("m0"), Some("mz"))
-      .collect().map(_.getString(0)).sorted.toSeq == Seq("m1", "m9"))
+    assert(t.scan(mBand).collect().map(_.getString(0)).sorted.toSeq == Seq("m1", "m9"))
     t.delete(rows(("m9", 0.0, "x", "2024-01-04T00:00:00Z")).select("_id"), Seq("_id"))
-    assert(t.readStatRange("_id", Some("m0"), Some("mz"))
-      .collect().map(_.getString(0)).toSeq == Seq("m1"))
+    assert(t.scan(mBand).collect().map(_.getString(0)).toSeq == Seq("m1"))
     // open-ended range; the statless file always survives pruning and
     // its rows row-filter correctly
-    assert(t.readStatRange("_id", None, Some("a9"))
+    assert(t.scan(RangeFilters("_id", None, Some("a9")))
       .collect().map(_.getString(0)).sorted.toSeq == Seq("a1", "a9"))
   }
 
   test("key blooms: prune hash-scattered files bounds cannot, conservative for uncovered, MoR-exact") {
     val wh = freshWarehouse()
     val t = IceliteTable.create(spark, wh, "ns", "bloomkeys", docSchema)
-    intercept[IllegalStateException](t.readForKeys(Seq("a1")))
     // three files with fully OVERLAPPING _id ranges [a*, z*] — min/max
     // bounds keep all three for any probe; only a bloom can skip
     t.append(rows(("a1", 1.0, "x", "2024-01-02T00:00:00Z"),
@@ -727,19 +727,24 @@ class IceliteTableSpec extends AnyFunSuite with SparkFixture {
     intercept[IllegalArgumentException](t.buildKeyBlooms("status")) // one bloom column per table
     // string-hash probe keeps exactly the carrier file (fpp ~1% on 3
     // files — a false positive would add a file, never lose the row)
-    assert(t.pruneByBlooms(Seq("z2")).size <= 2)
-    assert(t.pruneByBlooms(Seq("z2")).nonEmpty)
-    assert(t.readForKeys(Seq("z2")).collect().map(_.getString(0)).toSeq == Seq("z2"))
+    def keys(ks: String*) = Seq(In("_id", ks.toArray[Any]))
+    assert(t.planFiles(t.meta.snapshots, keys("z2"))._1.size <= 2)
+    assert(t.planFiles(t.meta.snapshots, keys("z2"))._1.nonEmpty)
+    assert(t.scan(keys("z2")).collect().map(_.getString(0)).toSeq == Seq("z2"))
+    // a literal of another type compares through a cast the bloom never
+    // hashed: no evidence, every file stays
+    assert(t.planFiles(t.meta.snapshots, Seq(In("_id", Array[Any](2L))))._1.toSet ==
+      t.meta.liveDataFiles.toSet)
     // a file appended AFTER the build has no bloom → always kept, and
     // its rows are findable before any re-build
     t.append(rows(("m9", 7.0, "w", "2024-01-05T00:00:00Z")))
-    assert(t.readForKeys(Seq("m9")).collect().map(_.getString(0)).toSeq == Seq("m9"))
+    assert(t.scan(keys("m9")).collect().map(_.getString(0)).toSeq == Seq("m9"))
     assert(t.buildKeyBlooms("_id") == 1) // fold: only the new file scans
     // MoR: a keyed delete wins over the pruned read
     t.delete(rows(("z2", 0.0, "x", "2024-01-03T00:00:00Z")).select("_id"), Seq("_id"))
-    assert(t.readForKeys(Seq("z2", "a3")).collect().map(_.getString(0)).toSeq == Seq("a3"))
+    assert(t.scan(keys("z2", "a3")).collect().map(_.getString(0)).toSeq == Seq("a3"))
     // an absent key returns empty (usually zero files even read)
-    assert(t.readForKeys(Seq("nope")).count() == 0)
+    assert(t.scan(keys("nope")).count() == 0)
   }
 
   test("ANALYZE stats drive the MoR delete-side broadcast decision") {
